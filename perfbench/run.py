@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {extract_fat,commit_thin,registry_headline}
+    python3 perfbench/run.py --workload {commit_thin,registry_headline}
                              --seed N --seconds S --trace {0,1}
 
 Run from the repository root. Generates the workload's inputs from the
