@@ -95,11 +95,15 @@ def main(argv: list[str] | None = None) -> int:
         out = dd.withColumn(
             "keep", F.col("parse_ok") & F.col("is_canonical")
             & (F.col("n_words") >= 30))
-        out.sortWithinPartitions("url").write.mode("overwrite")            .parquet(args.output)
-        kept = out.filter("keep").count()
-        total = out.count()
+        (out.sortWithinPartitions("url").write.mode("overwrite")
+            .parquet(args.output))
+        # counts from the written files: counting `out` would re-run
+        # the whole extract → dedup pipeline once per action
+        n = (spark.read.parquet(args.output)
+             .agg(F.count("*").alias("n_docs"),
+                  F.count_if("keep").alias("n_kept")).collect()[0])
         print(json.dumps({"cmd": "curate", "output": args.output,
-                          "n_docs": total, "n_kept": kept}))
+                          "n_docs": n["n_docs"], "n_kept": n["n_kept"]}))
     elif args.cmd == "vis":
         # debug rendering (visualize.py / det_test_imgs.py analog):
         # bounded sample, one annotated rendering per document

@@ -1,4 +1,5 @@
-"""Spark-side extraction operators: mapInPandas over the pure kernel.
+"""Spark-side extraction operators: Arrow-batched stages over the pure
+kernel (``mapInArrow`` for extraction, ``mapInPandas`` for blocks).
 
 The flagship pipeline (SURVEY.md §3.1 Spark equivalent):
 
@@ -7,7 +8,7 @@ The flagship pipeline (SURVEY.md §3.1 Spark equivalent):
          → pdf layout branch via layout.py kernels
 
 Scale discipline (north_rule / SURVEY.md §4):
-* one ``mapInPandas`` stage, no shuffle: blocks never leave their document,
+* one ``mapInArrow`` stage, no shuffle: blocks never leave their document,
   exactly like the reference's fan-out join staying in-process
   (``mmocr/utils/ocr.py:146-201``).
 * the fat ``html`` column is consumed inside this stage and NOT emitted —

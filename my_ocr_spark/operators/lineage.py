@@ -8,19 +8,21 @@ The reference's analog is checkpoint/resume of training runs
   (partition_id, doc_count, byte_count, checksum). checksum is an
   order-insensitive XOR-fold of xxhash64(url, text) so it's stable under
   intra-partition reordering.
-* ``write_with_lineage`` — writes data partitioned by a deterministic
-  bucket column + a _lineage/ manifest per bucket. A resumed job calls
-  ``completed_buckets`` and processes only missing buckets, overwriting
-  per-bucket directories (idempotent overwrite-by-partition — the
+* ``write_with_lineage`` — one write of the data partitioned by a
+  deterministic bucket column, then a _lineage/ manifest per bucket
+  computed by one aggregate over the files read back from disk. A resumed
+  job calls ``completed_buckets`` and writes only the missing buckets,
+  overwriting their directories (idempotent overwrite-by-partition — the
   parquet-manifest emulation of Iceberg snapshot commit; with Iceberg jars
   present the same API maps to format("iceberg") + snapshot metadata).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 BUCKET_COL = "_bucket"
 
@@ -35,21 +37,20 @@ def with_bucket(df: DataFrame, key_col: str = "url",
                           .cast("int"))
 
 
+def _fold(key_col: str, payload_col: str) -> list:
+    """(doc_count, byte_count, checksum) aggregates. The checksum is a
+    bit_xor fold of xxhash64(key, payload): commutative, so it is stable
+    under reordering, and any dropped/duplicated/mutated row flips it."""
+    return [F.count("*").alias("doc_count"),
+            F.sum(F.octet_length(payload_col)).alias("byte_count"),
+            F.bit_xor(F.xxhash64(key_col, payload_col)).alias("checksum")]
+
+
 def lineage_rows(df: DataFrame, key_col: str = "url",
                  payload_col: str = "text") -> DataFrame:
-    """(partition_id, doc_count, byte_count, checksum) per partition.
-
-    XOR-fold of row hashes is commutative → stable under partition-local
-    reordering; any dropped/duplicated row flips the checksum."""
-    h = F.xxhash64(key_col, payload_col)
-    return (df.withColumn("_pid", F.spark_partition_id())
-              .groupBy(F.col("_pid").alias("partition_id"))
-              .agg(F.count("*").alias("doc_count"),
-                   F.sum(F.octet_length(payload_col)).alias("byte_count"),
-                   # bit_xor aggregate: order-insensitive fold
-                   F.expr(f"bit_xor(xxhash64({key_col}, {payload_col}))")
-                    .alias("checksum"))
-              .withColumn("checksum", F.col("checksum").cast("long")))
+    """(partition_id, doc_count, byte_count, checksum) per partition."""
+    return (df.groupBy(F.spark_partition_id().alias("partition_id"))
+              .agg(*_fold(key_col, payload_col)))
 
 
 def completed_buckets(out_dir: str) -> set[int]:
@@ -69,68 +70,49 @@ def write_with_lineage(df: DataFrame, out_dir: str, key_col: str = "url",
                        resume: bool = True) -> dict:
     """Idempotent bucket-partitioned write with per-bucket lineage commit.
 
-    Returns {written: [...], skipped: [...]}. Each bucket is written with
-    dynamic partition overwrite (re-running a bucket replaces it exactly),
-    then its manifest (doc_count, byte_count, checksum) is committed LAST —
-    a bucket without a manifest is treated as uncommitted and rewritten on
-    resume. This is the directory-manifest emulation of an Iceberg
-    snapshot commit (SURVEY.md §7.3.3)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    b = with_bucket(df, key_col, n_buckets)
+    Returns {written: [...], skipped: [...]}. The to-do buckets are written
+    in one dynamic-overwrite ``partitionBy(_bucket)`` write (re-running a
+    bucket replaces it exactly, other buckets' directories stay). Their
+    manifests (doc_count, byte_count, checksum) come from one aggregate
+    over the files just written, read back from disk, and are committed
+    LAST — a bucket without a manifest is treated as uncommitted and
+    rewritten on resume. This is the directory-manifest emulation of an
+    Iceberg snapshot commit (SURVEY.md §7.3.3)."""
     done = completed_buckets(out_dir) if resume else set()
     todo = sorted(set(range(n_buckets)) - done)
     mdir = os.path.join(out_dir, "_lineage")
     os.makedirs(mdir, exist_ok=True)
-    written = []
-    if todo:
-        # each bucket is its own commit unit (two jobs: data + stats),
-        # so WITHOUT materialization the upstream pipeline would re-run
-        # 2 x len(todo) times — the per-bucket resume granularity is
-        # worth one disk-backed cache, not that
-        b = b.persist()
-    try:
-        written = _write_buckets(b, todo, out_dir, mdir,
-                                 key_col, payload_col)
-    finally:
-        if todo:
-            b.unpersist()
-    return {"written": written, "skipped": sorted(done)}
-
-
-def _write_buckets(b: DataFrame, todo, out_dir: str, mdir: str,
-                   key_col: str, payload_col: str) -> list:
-    import json
-
-    written = []
+    if not todo:
+        return {"written": [], "skipped": sorted(done)}
+    b = with_bucket(df, key_col, n_buckets)
+    if done:
+        b = b.filter(F.col(BUCKET_COL).isin(todo))
+    # the writer option, not the session conf: a session-wide dynamic
+    # mode would leave stale partitions behind in every later
+    # overwrite-by-partition write of the session
+    (b.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(BUCKET_COL)
+      .parquet(out_dir))
+    stats = {r[BUCKET_COL]: r.asDict() for r in
+             df.sparkSession.read.schema(b.schema).parquet(out_dir)
+             .filter(F.col(BUCKET_COL).isin(todo))
+             .groupBy(BUCKET_COL).agg(*_fold(key_col, payload_col))
+             .collect()}
     for bucket in todo:
-        part = b.filter(F.col(BUCKET_COL) == bucket)
-        (part.write.mode("overwrite")
-             .partitionBy(BUCKET_COL)
-             .parquet(out_dir))
-        stats = (part.agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.octet_length(payload_col)).alias("byte_count"),
-            F.expr(f"bit_xor(xxhash64({key_col}, {payload_col}))")
-             .alias("checksum")).collect()[0])
-        manifest = {
-            "bucket": bucket,
-            "doc_count": stats["doc_count"],
-            "byte_count": int(stats["byte_count"] or 0),
-            "checksum": int(stats["checksum"] or 0),
-        }
+        s = stats.get(bucket, {})  # a bucket with no rows has no files
+        manifest = {"bucket": bucket,
+                    **{k: int(s.get(k) or 0)
+                       for k in ("doc_count", "byte_count", "checksum")}}
         tmp = os.path.join(mdir, f".bucket={bucket}.json.tmp")
-        final = os.path.join(mdir, f"bucket={bucket}.json")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
-        os.replace(tmp, final)  # atomic commit point
-        written.append(bucket)
-    return written
+        # atomic commit point
+        os.replace(tmp, os.path.join(mdir, f"bucket={bucket}.json"))
+    return {"written": todo, "skipped": sorted(done)}
 
 
 def read_lineage_manifests(out_dir: str) -> list[dict]:
-    import json
-
     mdir = os.path.join(out_dir, "_lineage")
     out = []
     for b in sorted(completed_buckets(out_dir)):

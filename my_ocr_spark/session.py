@@ -46,8 +46,9 @@ def get_spark(app_name: str = "my_ocr_spark",
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for pandas UDFs. Batch ROWS is the only knob Spark offers,
-        # but the real constraint is BYTES/batch: pick rows ≈ target_bytes
+        # Arrow for pandas UDFs. The real constraint is BYTES/batch; only
+        # the row cap is set here (spark.sql.execution.arrow.
+        # maxBytesPerBatch also exists in 4.1): pick rows ≈ target_bytes
         # / page_size. Small synthetic pages (~1 KB) want 2048-4096 (Arrow
         # per-batch overhead dominates below that — measured 4×); multi-MB
         # real pages want 64-256. Env-tunable per corpus.

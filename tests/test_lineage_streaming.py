@@ -49,9 +49,64 @@ def test_write_with_lineage_resume(spark, docs_df, tmp_path):
     manifests = {m["bucket"]: m for m in read_lineage_manifests(out)}
     assert set(manifests) == {0, 1, 2, 3}
     assert sum(m["doc_count"] for m in manifests.values()) == df.count()
+    # every manifest, resumed or not, describes its bucket's data on disk
+    back = {r["_bucket"]: {"bucket": r["_bucket"], "doc_count": r["n"],
+                           "byte_count": r["bytes"], "checksum": r["fold"]}
+            for r in spark.read.parquet(out).groupBy("_bucket").agg(
+                F.count("*").alias("n"),
+                F.sum(F.octet_length("text")).alias("bytes"),
+                F.expr("bit_xor(xxhash64(url, text))").alias("fold"))
+            .collect()}
+    assert manifests == back
     # third run: everything skipped
     r3 = write_with_lineage(df, out, n_buckets=4)
     assert r3["written"] == []
+
+
+def test_write_with_lineage_leaves_session_conf(spark, tmp_path):
+    """Dynamic partition overwrite is a writer option: a session-wide
+    setting would make every later overwrite-by-partition write of the
+    session keep stale partitions."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = spark.createDataFrame([("u1", "a"), ("u2", "b")],
+                                   "url string, text string")
+        write_with_lineage(df, str(tmp_path / "sink"), n_buckets=2)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_write_with_lineage_cost_flat_in_buckets(spark, docs_df, tmp_path):
+    """The commit runs the same Spark jobs at 2 and at 16 buckets, and
+    leaves nothing cached after either of two sequential corpora (RDDs
+    other tests of this session left persisted are not its own)."""
+    sc = spark.sparkContext
+    df = docs_df.select("url", "text")
+
+    def cached():
+        return set(sc._jsc.getPersistentRDDs().keys())
+    others = cached()
+
+    def run(corpus, n_buckets, tag):
+        group = f"lineage-cost-{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            stats = write_with_lineage(corpus, str(tmp_path / tag),
+                                       n_buckets=n_buckets)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats["written"] == list(range(n_buckets))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert cached() == others, tag
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs_2 = run(df, 2, "a2")
+    jobs_16 = run(df, 16, "a16")
+    assert jobs_2 == jobs_16 > 0
+    assert run(df.filter(F.col("url").endswith("1")), 16, "b16") == jobs_16
 
 
 def test_streaming_extract_matches_batch(spark, docs_df, tmp_path):

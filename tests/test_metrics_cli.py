@@ -78,3 +78,4 @@ def test_cli_curate_end_to_end(spark, docs_df, tmp_path):
     got = spark.read.parquet(out_dir)
     assert set(["url", "keep", "dup_n", "is_canonical"]) <= set(got.columns)
     assert got.count() == stats["n_docs"]
+    assert got.filter("keep").count() == stats["n_kept"]

@@ -176,10 +176,17 @@ def test_standalone_cluster_end_to_end(spark, docs_df, tmp_path):
         import pytest
         pytest.skip("no standalone spark-class scripts in container")
 
-    def _free_port() -> int:
-        with socket.socket() as s:
-            s.bind(("127.0.0.1", 0))
-            return s.getsockname()[1]
+    def _free_ports(n: int) -> list[int]:
+        # hold every socket until all are bound: closing one before the
+        # next bind lets the OS hand the same port out twice
+        socks = [socket.socket() for _ in range(n)]
+        try:
+            for s in socks:
+                s.bind(("127.0.0.1", 0))
+            return [s.getsockname()[1] for s in socks]
+        finally:
+            for s in socks:
+                s.close()
 
     from scripts.bench_cluster import SPARK_SUBMIT, Cluster, _clean_env
     from scripts.make_pyfiles import build
@@ -202,8 +209,9 @@ def test_standalone_cluster_end_to_end(spark, docs_df, tmp_path):
         "ex.select('url', F.md5('text').alias('h'))"
         ".repartition(4).write.parquet(sys.argv[2])\n"
         "spark.stop()\n")
-    with Cluster(2, str(tmp_path / "cluster"), master_port=_free_port(),
-                 ui_port=_free_port(), cores_per_worker=2,
+    master_port, ui_port = _free_ports(2)
+    with Cluster(2, str(tmp_path / "cluster"), master_port=master_port,
+                 ui_port=ui_port, cores_per_worker=2,
                  memory="2g") as c:
         p = subprocess.run(
             [SPARK_SUBMIT, "--master", c.master_url,
