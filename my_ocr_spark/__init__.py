@@ -1,7 +1,7 @@
 """my_ocr_spark — a from-scratch PySpark-native main-content extraction engine.
 
 Re-expresses the capabilities of the reference (liangxiaoyun/my-ocr, an
-MMOCR v0.2.0 fork — see /root/repo/SURVEY.md) as idiomatic Spark:
+MMOCR v0.2.0 fork — see SURVEY.md) as idiomatic Spark:
 
 * ``kernel/``    — pure-Python (stdlib+numpy only) deterministic extraction
                    kernels: HTML DOM parse, block scoring, boilerplate strip,

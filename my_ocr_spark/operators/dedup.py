@@ -22,7 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from my_ocr_spark.kernel import textstats as ts
-from my_ocr_spark.session import spread_small_scan
+from my_ocr_spark.session import map_rows, spread_small_scan
 
 # portable normalization used on BOTH engines (same regex in oracle SQL)
 NORMALIZE_RE = "[^a-z0-9一-龥 ]"
@@ -74,35 +74,25 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     compare); the skew bound itself is pytest-checked with a synthetic
     1-shingle-in-1000-docs corpus.
     """
-    df = spread_small_scan(df.select(F.col(id_col), F.col(text_col)))
+    df = df.select(F.col(id_col), F.col(text_col))
     if n == 1:
         words = F.split(normalized_col(text_col), " ")
-        sh = df.select(F.col(id_col).alias("doc"),
-                       F.explode(F.array_distinct(words)).alias("shingle"))
+        sh = spread_small_scan(df).select(
+            F.col(id_col).alias("doc"),
+            F.explode(F.array_distinct(words)).alias("shingle"))
     else:
-        # n-gram shingles via Arrow-batched pandas UDF over the kernel.
+        # n-gram shingles in the per-row Python stage over the kernel.
         # The declarative alternative — transform(sequence(...),
         # i -> array_join(slice(words, i+1, n))) — re-evaluates the
         # normalization+split per lambda element (no CSE through
         # higher-order functions): measured 14.6 s vs <2 s for 5k docs.
         # Still narrow: shingles stay in their document's partition.
-        sh_schema = T.StructType([
-            T.StructField("doc", T.LongType(), False),
-            T.StructField("shingle", T.StringType(), False),
-        ])
+        def word_shingle_rows(doc, text):
+            for s in ts.word_shingles(text or "", k=n):
+                yield doc, s
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                docs, shingles = [], []
-                for doc, text in zip(pdf["_id"], pdf["_text"]):
-                    for s in ts.word_shingles(text or "", k=n):
-                        docs.append(doc)
-                        shingles.append(s)
-                yield pd.DataFrame({"doc": docs, "shingle": shingles})
-
-        sh = (df.select(F.col(id_col).alias("_id"),
-                        F.col(text_col).alias("_text"))
-                .mapInPandas(gen, schema=sh_schema))
+        sh = map_rows(df, word_shingle_rows,
+                      "doc bigint not null, shingle string not null")
     sh = sh.filter(F.col("shingle") != "")
     # Postings-list inverted index: ONE aggregation keyed by shingle
     # carries both df and the (sorted) posting list. Pairs explode from
@@ -267,26 +257,21 @@ def shingle_hash_sets(df: DataFrame, id_col: str, text_col: str,
     hashes. The narrow verify-side representation: ~8 B per shingle,
     set ops become JVM array intersects, and the fat text column never
     crosses a pair join."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict = {}
-        for pdf in batches:
-            hs = []
-            for text in pdf["_text"]:
-                out = []
-                for s in ts.word_shingles(text or "", k=shingle_k):
-                    v = memo.get(s)
-                    if v is None:
-                        v = ts._md5_int64(s)
-                        if len(memo) < 2_000_000:
-                            memo[s] = v
-                    out.append(v)
-                hs.append(sorted(set(out)))
-            yield pd.DataFrame({"doc": pdf["_id"], "hs": hs})
+    memo: dict = {}
 
-    src = spread_small_scan(
-        df.select(F.col(id_col).alias("_id"),
-                  F.col(text_col).alias("_text")))
-    return src.mapInPandas(run, schema=_HASHSET_SCHEMA)
+    def shingle_hash_set(doc, text):
+        hs = set()
+        for s in ts.word_shingles(text or "", k=shingle_k):
+            v = memo.get(s)
+            if v is None:
+                v = ts._md5_int64(s)
+                if len(memo) < 2_000_000:
+                    memo[s] = v
+            hs.add(v)
+        yield doc, sorted(hs)
+
+    return map_rows(df.select(id_col, text_col), shingle_hash_set,
+                    _HASHSET_SCHEMA)
 
 
 def minhash_then_verify(df: DataFrame, id_col: str, text_col: str,
@@ -338,17 +323,10 @@ _SIMHASH_SCHEMA = T.StructType([
 
 
 def simhash_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc": pdf["_id"],
-                "simhash": [ts.simhash64(t or "") for t in pdf["_text"]],
-            })
+    def simhash(doc, text):
+        yield doc, ts.simhash64(text or "")
 
-    src = spread_small_scan(
-        df.select(F.col(id_col).alias("_id"),
-                  F.col(text_col).alias("_text")))
-    return src.mapInPandas(run, schema=_SIMHASH_SCHEMA)
+    return map_rows(df.select(id_col, text_col), simhash, _SIMHASH_SCHEMA)
 
 
 def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
@@ -362,7 +340,7 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
     contract as ``persist_bands`` on minhash_lsh_candidates — pass False
     or clearCache between corpora in long-lived sessions)."""
     sh = simhash_docs(df, id_col, text_col)
-    # two longs per doc, but the mapInPandas above runs simhash64 over
+    # two longs per doc, but the Python stage above runs simhash64 over
     # every document's full text — and the self-join below otherwise
     # executes that pass TWICE (pruned copies, no ReuseExchange; same
     # recompute class as minhash_lsh_candidates, measured there 2.6x)
@@ -417,7 +395,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     hot-gram corpus. Cost: one shuffle on the gram hash, one on the
     (doc1, doc2, diagonal) span key.
     """
-    # gram hashing in an Arrow-batched pandas stage over the kernel
+    # gram hashing in the per-row Python stage over the kernel
     # normalizer (the exact oracle twin, same path ngram shingles use).
     # The previous JVM form — posexplode(transform(sequence(...),
     # i -> md5(array_join(slice(words, i, W), ' ')))) — runs the lambda
@@ -431,36 +409,20 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     # key is half the bytes of the hex form.
     import hashlib
 
-    df = spread_small_scan(df.select(F.col(id_col), F.col(text_col)))
-    gram_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("pos", T.LongType(), False),
-        T.StructField("gh", T.BinaryType(), False),
-    ])
+    md5 = hashlib.md5
+    norm = ts.normalize_for_fingerprint
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        norm = ts.normalize_for_fingerprint
-        join = " ".join
-        for pdf in batches:
-            ids, poss, ghs = [], [], []
-            for doc, text in zip(pdf["_id"], pdf["_text"]):
-                words = norm(text or "").split()
-                n = len(words)
-                # JVM split("") yields [''] (size 1 < gram_width): both
-                # forms drop docs shorter than gram_width words
-                if n < gram_width:
-                    continue
-                for i in range(n - gram_width + 1):
-                    ids.append(doc)
-                    poss.append(i + 1)
-                    ghs.append(md5(
-                        join(words[i:i + gram_width]).encode()).digest())
-            yield pd.DataFrame({"doc_id": ids, "pos": poss, "gh": ghs})
+    def gram_hashes(doc, text):
+        words = norm(text or "").split()
+        # JVM split("") yields [''] (size 1 < gram_width): both forms
+        # drop docs shorter than gram_width words (empty range here)
+        for i in range(len(words) - gram_width + 1):
+            yield doc, i + 1, md5(
+                " ".join(words[i:i + gram_width]).encode()).digest()
 
-    h = (df.select(F.col(id_col).alias("_id"),
-                   F.col(text_col).alias("_text"))
-           .mapInPandas(gen, schema=gram_schema))
+    h = map_rows(df.select(id_col, text_col), gram_hashes,
+                 "doc_id bigint not null, pos bigint not null, "
+                 "gh binary not null")
     # no sort: the postings list is exploded immediately and every
     # downstream agg / the driver compare is order-insensitive
     post = (h.groupBy("gh")

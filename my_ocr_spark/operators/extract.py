@@ -1,5 +1,5 @@
 """Spark-side extraction operators: Arrow-batched stages over the pure
-kernel (``mapInArrow`` for extraction, ``mapInPandas`` for blocks).
+kernel (``mapInArrow`` for extraction, ``map_rows`` for blocks).
 
 The flagship pipeline (SURVEY.md §3.1 Spark equivalent):
 
@@ -22,13 +22,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from my_ocr_spark.kernel.extract import extract_main_text
 from my_ocr_spark.kernel.htmlparse import parse_blocks
 from my_ocr_spark.kernel.extract import score_block, classify_blocks
 from my_ocr_spark.schemas import BLOCKS_SCHEMA, EXTRACTED_SCHEMA
+from my_ocr_spark.session import map_rows
 
 
 def repartition_by_url(docs: DataFrame, num_partitions: int,
@@ -120,34 +120,14 @@ def explode_blocks(docs: DataFrame) -> DataFrame:
     (``mmocr/models/textdet/postprocess/wrapper.py:177-229``).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "block_id", "tag", "tag_path",
-                                    "depth", "text", "n_chars",
-                                    "n_link_chars", "n_words", "n_punct",
-                                    "is_heading", "in_nav_footer",
-                                    "score", "keep")}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                _, blocks = parse_blocks(html)
-                keep = classify_blocks(blocks)
-                for b, k in zip(blocks, keep):
-                    rows["url"].append(url)
-                    rows["block_id"].append(b.block_id)
-                    rows["tag"].append(b.tag)
-                    rows["tag_path"].append(b.tag_path)
-                    rows["depth"].append(b.depth)
-                    rows["text"].append(b.text)
-                    rows["n_chars"].append(b.n_chars)
-                    rows["n_link_chars"].append(b.n_link_chars)
-                    rows["n_words"].append(b.n_words)
-                    rows["n_punct"].append(b.n_punct)
-                    rows["is_heading"].append(b.is_heading)
-                    rows["in_nav_footer"].append(b.in_nav_footer)
-                    rows["score"].append(score_block(b))
-                    rows["keep"].append(bool(k))
-            yield pd.DataFrame(rows)
+    def blocks(url, html):
+        _, bl = parse_blocks(html)
+        for b, k in zip(bl, classify_blocks(bl)):
+            yield (url, b.block_id, b.tag, b.tag_path, b.depth, b.text,
+                   b.n_chars, b.n_link_chars, b.n_words, b.n_punct,
+                   b.is_heading, b.in_nav_footer, score_block(b), bool(k))
 
-    return docs.select("url", "html").mapInPandas(run, schema=BLOCKS_SCHEMA)
+    return map_rows(docs.select("url", "html"), blocks, BLOCKS_SCHEMA)
 
 
 def latest_snapshot(docs: DataFrame, key_col: str = "url",

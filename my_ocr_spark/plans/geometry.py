@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from my_ocr_spark.plans.registry import query, t
-from my_ocr_spark.session import spread_small_scan
+from my_ocr_spark.session import map_rows, spread_small_scan
 from my_ocr_spark.plans.relational import _GT_SQL, _PRED_SQL, _gt_pred
 
 
@@ -403,7 +403,6 @@ def poly_iou_match_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the closed-form DuckDB oracle — no float rounding
     anywhere."""
     from my_ocr_spark.kernel import polyclip as pc
-    from my_ocr_spark.session import spread_small_scan
 
     gt, pred = _quad_tables(spark, sf_dir)
     # spread the probe side: the gt side broadcasts, so the join AND
@@ -1076,27 +1075,19 @@ def sort_vertex_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = t(spark, sf_dir, "orders").select("o_orderkey")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"poly_id": [], "ring_csv": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                a, b = 20.0 + k % 30, 5.0 + k % 17
-                tx, ty = float(k % 50), float(k % 70)
-                ring = [(tx, ty),
-                        (tx + a * 0.6, ty + a * 0.8),
-                        (tx + a * 0.6 - b * 0.8, ty + a * 0.8 + b * 0.6),
-                        (tx - b * 0.8, ty + b * 0.6)]
-                rot, flip = k % 4, k % 2
-                pts = [ring[(j * (1 + 2 * flip) + rot) % 4]
-                       for j in range(4)]
-                srt = sort_quad_vertices(np.array(pts, dtype=np.float64))
-                out["poly_id"].append(k)
-                out["ring_csv"].append(",".join(
-                    f"{round(x, 4)}:{round(y, 4)}" for x, y in srt))
-            yield pd.DataFrame(out)
+    def sorted_ring(k):
+        a, b = 20.0 + k % 30, 5.0 + k % 17
+        tx, ty = float(k % 50), float(k % 70)
+        ring = [(tx, ty),
+                (tx + a * 0.6, ty + a * 0.8),
+                (tx + a * 0.6 - b * 0.8, ty + a * 0.8 + b * 0.6),
+                (tx - b * 0.8, ty + b * 0.6)]
+        rot, flip = k % 4, k % 2
+        pts = [ring[(j * (1 + 2 * flip) + rot) % 4] for j in range(4)]
+        srt = sort_quad_vertices(np.array(pts, dtype=np.float64))
+        yield k, ",".join(f"{round(x, 4)}:{round(y, 4)}" for x, y in srt)
 
-    return spread_small_scan(o).mapInPandas(run, schema=_SV_OUT)
+    return map_rows(o, sorted_ring, _SV_OUT)
 
 
 # --- TPS rectification (tps_preprocessor.py grid generator) -----------------
@@ -1189,23 +1180,17 @@ def tps_warp_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select("o_orderkey")
     base = tps_fiducials(20)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ii, jj = np.mgrid[0:9, 0:17]
-        for pdf in batches:
-            out = {"doc_key": [], "warp_sum": [], "tl_px": [], "br_px": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                a, b, tx, c, d, ty = _TPS_PARAMS[k % 6]
-                cp = base @ np.array([[a, b], [c, d]]).T + np.array([tx, ty])
-                img = ((k + 3 * ii + 7 * jj) % 17).astype(np.float64)
-                w = tps_warp_pixels(img, cp, (4, 8))
-                out["doc_key"].append(k)
-                out["warp_sum"].append(int(round(float(w.sum()))))
-                out["tl_px"].append(round(float(w[0, 0]), 6))
-                out["br_px"].append(round(float(w[3, 7]), 6))
-            yield pd.DataFrame(out)
+    ii, jj = np.mgrid[0:9, 0:17]
 
-    return spread_small_scan(o).mapInPandas(run, schema=_TPS_OUT)
+    def tps_warp(k):
+        a, b, tx, c, d, ty = _TPS_PARAMS[k % 6]
+        cp = base @ np.array([[a, b], [c, d]]).T + np.array([tx, ty])
+        img = ((k + 3 * ii + 7 * jj) % 17).astype(np.float64)
+        w = tps_warp_pixels(img, cp, (4, 8))
+        yield (k, int(round(float(w.sum()))), round(float(w[0, 0]), 6),
+               round(float(w[3, 7]), 6))
+
+    return map_rows(o, tps_warp, _TPS_OUT)
 
 
 # --- EastRandomCrop region finding (deterministic core) ---------------------
@@ -1361,8 +1346,9 @@ def fourier_descriptor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form the oracle re-derives as explicit DFT sign arithmetic.
     k=1 captures all non-zero frequencies of a 4-point regular contour,
     so the roundtrip returns the input vertices — descriptor AND inverse
-    are both pinned, not just a checksum. One narrow mapInPandas over
-    the scan (no shuffle); per-row numpy work is O(n_sample log n)."""
+    are both pinned, not just a checksum. One narrow map_rows stage
+    over the scan (no shuffle); per-row numpy work is
+    O(n_sample log n)."""
     import math
 
     from my_ocr_spark.kernel.fourier import fourier2poly, poly2fourier
@@ -1373,33 +1359,24 @@ def fourier_descriptor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     def r4(x: float) -> float:
         return math.floor(x * 1e4 + 0.5) / 1e4
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["poly_id", "shape", *_FOURIER_COLS]
-        for pdf in batches:
-            recs = []
-            for key in pdf["o_orderkey"]:
-                key = int(key)
-                cx = float(key % 97)
-                cy = float((3 * key) % 89)
-                r = float(1 + key % 13)
-                if key % 2 == 0:
-                    shape = "square"
-                    v = [(cx - r, cy - r), (cx + r, cy - r),
-                         (cx + r, cy + r), (cx - r, cy + r)]
-                else:
-                    shape = "diamond"
-                    v = [(cx + r, cy), (cx, cy + r),
-                         (cx - r, cy), (cx, cy - r)]
-                c = poly2fourier(np.array(v, dtype=np.float64),
-                                 k=1, n_sample=4)
-                rec = fourier2poly(c, n_points=4)
-                recs.append(
-                    [key, shape]
-                    + [r4(x) for z in c for x in (z.real, z.imag)]
-                    + [r4(float(x)) for p in rec for x in p])
-            yield pd.DataFrame(recs, columns=cols)
+    def fourier_roundtrip(key):
+        cx = float(key % 97)
+        cy = float((3 * key) % 89)
+        r = float(1 + key % 13)
+        if key % 2 == 0:
+            shape = "square"
+            v = [(cx - r, cy - r), (cx + r, cy - r),
+                 (cx + r, cy + r), (cx - r, cy + r)]
+        else:
+            shape = "diamond"
+            v = [(cx + r, cy), (cx, cy + r), (cx - r, cy), (cx, cy - r)]
+        c = poly2fourier(np.array(v, dtype=np.float64), k=1, n_sample=4)
+        rec = fourier2poly(c, n_points=4)
+        yield (key, shape,
+               *(r4(x) for z in c for x in (z.real, z.imag)),
+               *(r4(float(x)) for p in rec for x in p))
 
-    return spread_small_scan(o).mapInPandas(run, schema=_FOURIER_OUT)
+    return map_rows(o, fourier_roundtrip, _FOURIER_OUT)
 
 
 # --- fill_hole mask morphology (textsnake/fcenet decode pixel path) ---------
@@ -1464,36 +1441,26 @@ def fill_holes_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle re-derives reachability as a recursive-CTE BFS over free
     cells seeded at the grid border, equi-joined on (img, r+dr, c+dc).
     Counts and the positional checksum are exact integers. One narrow
-    mapInPandas over the scan; per-mask work is bounded (8x8)."""
+    map_rows stage over the scan; per-mask work is bounded (8x8)."""
     from my_ocr_spark.kernel.morphology import fill_hole
 
     o = (t(spark, sf_dir, "orders").select("o_orderkey")
          .filter(F.col("o_orderkey") % 7 == 0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr, cc = np.mgrid[0:8, 0:8]
-        wgt = rr * 8 + cc + 1
-        for pdf in batches:
-            out = {"img_id": [], "n_mask": [], "n_filled": [],
-                   "fill_checksum": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                x0, y0 = k % 3, k % 2
-                x1, y1 = 4 + k % 4, 5 + k % 3
-                ring = ((((cc == x0) | (cc == x1))
-                         & (rr >= y0) & (rr <= y1))
-                        | (((rr == y0) | (rr == y1))
-                           & (cc >= x0) & (cc <= x1)))
-                if k % 2 == 1:
-                    ring &= ~((rr == y0 + 1) & (cc == x0))
-                f = fill_hole(ring)
-                out["img_id"].append(k)
-                out["n_mask"].append(int(ring.sum()))
-                out["n_filled"].append(int(f.sum()))
-                out["fill_checksum"].append(int(wgt[f].sum()))
-            yield pd.DataFrame(out)
+    rr, cc = np.mgrid[0:8, 0:8]
+    wgt = rr * 8 + cc + 1
 
-    return spread_small_scan(o).mapInPandas(run, schema=_FILL_OUT)
+    def fill_ring(k):
+        x0, y0 = k % 3, k % 2
+        x1, y1 = 4 + k % 4, 5 + k % 3
+        ring = ((((cc == x0) | (cc == x1)) & (rr >= y0) & (rr <= y1))
+                | (((rr == y0) | (rr == y1)) & (cc >= x0) & (cc <= x1)))
+        if k % 2 == 1:
+            ring &= ~((rr == y0 + 1) & (cc == x0))
+        f = fill_hole(ring)
+        yield k, int(ring.sum()), int(f.sum()), int(wgt[f].sum())
+
+    return map_rows(o, fill_ring, _FILL_OUT)
 
 
 # --- Zhang-Suen skeletonize (textsnake decode center-line path) -------------
@@ -1624,29 +1591,21 @@ def skeletonize_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the SAME two-subiteration parallel algorithm as chained SQL
     grid levels (5 passes — beyond the fixture family's convergence,
     which test_morphology pins). Counts and positional checksum are
-    exact integers; one narrow mapInPandas over the scan."""
+    exact integers; one narrow map_rows stage over the scan."""
     from my_ocr_spark.kernel.morphology import skeletonize
 
     o = (t(spark, sf_dir, "orders").select("o_orderkey")
          .filter(F.col("o_orderkey") % 31 == 0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr, cc = np.mgrid[0:8, 0:8]
-        wgt = rr * 8 + cc + 1
-        for pdf in batches:
-            out = {"img_id": [], "n_in": [], "n_skel": [],
-                   "skel_checksum": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                m = _skel_mask_numpy(k, rr, cc)
-                s = skeletonize(m)
-                out["img_id"].append(k)
-                out["n_in"].append(int(m.sum()))
-                out["n_skel"].append(int(s.sum()))
-                out["skel_checksum"].append(int(wgt[s].sum()))
-            yield pd.DataFrame(out)
+    rr, cc = np.mgrid[0:8, 0:8]
+    wgt = rr * 8 + cc + 1
 
-    return spread_small_scan(o).mapInPandas(run, schema=_SKEL_OUT)
+    def skeleton(k):
+        m = _skel_mask_numpy(k, rr, cc)
+        s = skeletonize(m)
+        yield k, int(m.sum()), int(s.sum()), int(wgt[s].sum())
+
+    return map_rows(o, skeleton, _SKEL_OUT)
 
 
 # --- textsnake center-mask decode: fill -> instances -> skeletons -----------
@@ -1759,7 +1718,8 @@ def textsnake_center_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays all three stages in SQL (BFS reachability, min-label
     closure over an 8-neighbor offsets table, the shared unrolled
     Zhang-Suen chain). Per-(image, instance) pixel counts and the
-    positional checksum are exact integers. One narrow mapInPandas."""
+    positional checksum are exact integers. One narrow map_rows
+    stage."""
     from my_ocr_spark.kernel.morphology import (
         fill_hole, label_components, skeletonize,
     )
@@ -1767,28 +1727,19 @@ def textsnake_center_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (t(spark, sf_dir, "orders").select("o_orderkey")
          .filter(F.col("o_orderkey") % 37 == 0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr, cc = np.mgrid[0:12, 0:12]
-        wgt = rr * 12 + cc + 1
-        for pdf in batches:
-            out = {"img_id": [], "instance": [], "n_fill_px": [],
-                   "n_skel_px": [], "skel_checksum": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                m = _ts_mask_numpy(k, rr, cc)
-                f = fill_hole(m)
-                lab = label_components(f, connectivity=8)
-                sk = skeletonize(f)
-                for inst in np.unique(lab[lab >= 0]):
-                    sel = lab == inst
-                    out["img_id"].append(k)
-                    out["instance"].append(int(inst))
-                    out["n_fill_px"].append(int(sel.sum()))
-                    out["n_skel_px"].append(int((sk & sel).sum()))
-                    out["skel_checksum"].append(int(wgt[sk & sel].sum()))
-            yield pd.DataFrame(out)
+    rr, cc = np.mgrid[0:12, 0:12]
+    wgt = rr * 12 + cc + 1
 
-    return spread_small_scan(o).mapInPandas(run, schema=_TS_OUT)
+    def center_instances(k):
+        f = fill_hole(_ts_mask_numpy(k, rr, cc))
+        lab = label_components(f, connectivity=8)
+        sk = skeletonize(f)
+        for inst in np.unique(lab[lab >= 0]):
+            sel = lab == inst
+            yield (k, int(inst), int(sel.sum()), int((sk & sel).sum()),
+                   int(wgt[sk & sel].sum()))
+
+    return map_rows(o, center_instances, _TS_OUT)
 
 
 # --- textsnake centralize (normal marching, wrapper.py:245-272) -------------
@@ -1851,55 +1802,45 @@ def centralize_normals(spark: SparkSession, sf_dir: str) -> DataFrame:
     at column 1 (lo is greatest(a, 1) in the oracle for exactly that
     reason, and it now binds for half the odd keys). The kernel
     runs the real per-point marching loop; the oracle computes the
-    stop counts as ceil/floor closed forms. One narrow mapInPandas."""
+    stop counts as ceil/floor closed forms. One narrow map_rows
+    stage."""
     from my_ocr_spark.kernel.morphology import march_along_normals
 
     o = (t(spark, sf_dir, "orders").select("o_orderkey")
          .filter(F.col("o_orderkey") % 23 == 0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"img_id": [], "axis": [], "top_pos": [],
-                   "bot_pos": [], "center_y": [], "center_x": []}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                s = 0.25 * (2 + 2 * (k % 3))
-                mask = np.zeros((16, 16), dtype=bool)
-                if k % 2 == 0:
-                    a = 2 + k % 3
-                    b = a + 5 + k % 4
-                    p0 = a + k % (b - a + 1)
-                    mask[a:b + 1, :] = True
-                    pts = np.array([[float(p0), 8.0]])
-                    step = np.array([[s, 0.0]])
-                    axis = "y"
-                else:
-                    # (k // 2) % 2: half the odd keys start the bar at
-                    # column 0, so the reference's asymmetric next_x > 0
-                    # stop GENUINELY diverges from the mask bound (the
-                    # oracle's lo = greatest(a, 1)); with a = k % 2 the
-                    # mask never covered column 0 and the quirk was
-                    # unexercised
-                    a = (k // 2) % 2
-                    b = 9 + k % 5
-                    p0 = a + 1 + k % (b - a)
-                    mask[:, a:b + 1] = True
-                    pts = np.array([[8.0, float(p0)]])
-                    step = np.array([[0.0, s]])
-                    axis = "x"
-                top = march_along_normals(pts, step, mask, 1)[0]
-                bot = march_along_normals(pts, step, mask, -1)[0]
-                dim = 0 if axis == "y" else 1
-                center = int((top[dim] + bot[dim]) * 0.5)  # trunc, +ve
-                out["img_id"].append(k)
-                out["axis"].append(axis)
-                out["top_pos"].append(float(top[dim]))
-                out["bot_pos"].append(float(bot[dim]))
-                out["center_y"].append(center if axis == "y" else 8)
-                out["center_x"].append(center if axis == "x" else 8)
-            yield pd.DataFrame(out)
+    def centralize(k):
+        s = 0.25 * (2 + 2 * (k % 3))
+        mask = np.zeros((16, 16), dtype=bool)
+        if k % 2 == 0:
+            a = 2 + k % 3
+            b = a + 5 + k % 4
+            p0 = a + k % (b - a + 1)
+            mask[a:b + 1, :] = True
+            pts = np.array([[float(p0), 8.0]])
+            step = np.array([[s, 0.0]])
+            axis = "y"
+        else:
+            # (k // 2) % 2: half the odd keys start the bar at column 0,
+            # so the reference's asymmetric next_x > 0 stop GENUINELY
+            # diverges from the mask bound (the oracle's lo =
+            # greatest(a, 1)); with a = k % 2 the mask never covered
+            # column 0 and the quirk was unexercised
+            a = (k // 2) % 2
+            b = 9 + k % 5
+            p0 = a + 1 + k % (b - a)
+            mask[:, a:b + 1] = True
+            pts = np.array([[8.0, float(p0)]])
+            step = np.array([[0.0, s]])
+            axis = "x"
+        top = march_along_normals(pts, step, mask, 1)[0]
+        bot = march_along_normals(pts, step, mask, -1)[0]
+        dim = 0 if axis == "y" else 1
+        center = int((top[dim] + bot[dim]) * 0.5)  # trunc, +ve
+        yield (k, axis, float(top[dim]), float(bot[dim]),
+               center if axis == "y" else 8, center if axis == "x" else 8)
 
-    return spread_small_scan(o).mapInPandas(run, schema=_CEN_OUT)
+    return map_rows(o, centralize, _CEN_OUT)
 
 
 # --- DBNet bitmap decode: binarize -> trace -> unclip -> minAreaRect --------
@@ -2093,56 +2034,40 @@ def db_decode_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole fixture family (rectilinear-plus-one-diagonal shapes
     whose min-area rect IS the axis bbox; 4dp floor-half-up rounding
     margin also pinned there). Scores are exact dyadic sums. One
-    narrow mapInPandas over the key scan; all shuffles happen in
+    narrow map_rows stage over the key scan; all shuffles happen in
     DuckDB only."""
     from my_ocr_spark.kernel.morphology import db_decode_regions
 
     o = (t(spark, sf_dir, "orders").select("o_orderkey")
          .filter(F.col("o_orderkey") % 41 == 0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rr, cc = np.mgrid[0:16, 0:16]
-        # every fixture parameter is a function of (k%3, k%5, k%4) and
-        # the score of k%5 — lcm 60 — so the full decode chain runs
-        # once per class and broadcasts over the batch (the shrink/warp
-        # memoization pattern; the chain is ~1.4 ms of per-image
-        # Python otherwise)
-        memo: dict[int, list[tuple]] = {}
+    rr, cc = np.mgrid[0:16, 0:16]
+    # every fixture parameter is a function of (k%3, k%5, k%4) and the
+    # score of k%5 — lcm 60 — so the full decode chain runs once per
+    # class and is reused across the task (the shrink/warp memoization
+    # pattern; the chain is ~1.4 ms of per-image Python otherwise)
+    memo: dict[int, list[tuple]] = {}
 
-        def solve(cls: int) -> list[tuple]:
-            if cls not in memo:
-                prob = _dbd_prob_numpy(cls, rr, cc)
-                rows = []
-                for reg in db_decode_regions(prob, mask_thr=0.3,
-                                             min_text_score=0.62,
-                                             min_text_width=3.0,
-                                             unclip_ratio=1.5):
-                    ring = reg["ring"]
-                    cs = sum((i + 1) * (int(r) * 16 + int(c) + 1)
-                             for i, (r, c) in enumerate(ring))
-                    rows.append((
-                        reg["label"], reg["n_walk"], reg["n_vertices"],
-                        int(cs), int(round(2 * reg["area"])),
-                        reg["peri"], reg["unclip_d"], reg["score"],
-                        float(np.floor(reg["rect_short"] * 1e4 + 0.5)
-                              / 1e4),
-                        float(np.floor(reg["rect_long"] * 1e4 + 0.5)
-                              / 1e4)))
-                memo[cls] = rows
-            return memo[cls]
+    def decode_regions(k):
+        cls = k % 60
+        if cls not in memo:
+            prob = _dbd_prob_numpy(cls, rr, cc)
+            rows = []
+            for reg in db_decode_regions(prob, mask_thr=0.3,
+                                         min_text_score=0.62,
+                                         min_text_width=3.0,
+                                         unclip_ratio=1.5):
+                ring = reg["ring"]
+                cs = sum((i + 1) * (int(r) * 16 + int(c) + 1)
+                         for i, (r, c) in enumerate(ring))
+                rows.append((
+                    reg["label"], reg["n_walk"], reg["n_vertices"],
+                    int(cs), int(round(2 * reg["area"])),
+                    reg["peri"], reg["unclip_d"], reg["score"],
+                    float(np.floor(reg["rect_short"] * 1e4 + 0.5) / 1e4),
+                    float(np.floor(reg["rect_long"] * 1e4 + 0.5) / 1e4)))
+            memo[cls] = rows
+        for row in memo[cls]:
+            yield (k, *row)
 
-        for pdf in batches:
-            out = {f.name: [] for f in _DBD_OUT.fields}
-            for k in pdf["o_orderkey"]:
-                k = int(k)
-                for row in solve(k % 60):
-                    out["img_id"].append(k)
-                    for name, v in zip(
-                            ("comp", "n_walk", "n_vertices",
-                             "vtx_checksum", "area2", "peri",
-                             "unclip_d", "score", "rect_short",
-                             "rect_long"), row):
-                        out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return spread_small_scan(o).mapInPandas(run, schema=_DBD_OUT)
+    return map_rows(o, decode_regions, _DBD_OUT)

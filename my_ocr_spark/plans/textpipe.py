@@ -18,6 +18,7 @@ from my_ocr_spark.operators.dedup import (
 )
 from my_ocr_spark.operators.similarity import cosine_topk, lsh_ann_topk
 from my_ocr_spark.plans.registry import query, t
+from my_ocr_spark.session import map_rows, spread_small_scan
 
 # the same normalization, spelled in DuckDB
 _NORM_SQL = ("trim(regexp_replace(regexp_replace(lower(text), "
@@ -512,33 +513,17 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive. Emitted as (doc_id, fingerprint) rows ready for a
     fingerprint-keyed dedup join. Oracle: the full hash+winnow pipeline
     re-derived in DuckDB SQL (HUGEINT mod-sum) — exact, not rows-only."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from my_ocr_spark.kernel.textstats import winnow_fingerprint
 
-    sch = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("fingerprint", T.LongType(), False),
-    ])
+    def winnow(doc, text):
+        for fp in winnow_fingerprint(text or ""):
+            yield doc, fp
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for doc, text in zip(pdf["doc_id"], pdf["text"]):
-                for fp in winnow_fingerprint(text or ""):
-                    ids.append(doc)
-                    fps.append(fp)
-            yield pd.DataFrame({"doc_id": ids, "fingerprint": fps})
-
-    from my_ocr_spark.session import spread_small_scan
-    # per-doc rolling-hash python pass: widen a 1-split scan first
-    # (cost-modeled no-op at corpus scale; sf1.0: 12.5 s -> ~1.5 s)
-    return (spread_small_scan(t(spark, sf_dir, "documents")
-                              .select("doc_id", "text"))
-            .mapInPandas(run, schema=sch))
+    # per-doc rolling-hash python pass: map_rows widens a 1-split scan
+    # first (cost-modeled no-op at corpus scale; sf1.0: 12.5 s -> ~1.5 s)
+    return map_rows(t(spark, sf_dir, "documents").select("doc_id", "text"),
+                    winnow, "doc_id bigint not null, "
+                    "fingerprint bigint not null")
 
 
 def _minhash_verify_oracle() -> str:
@@ -782,8 +767,6 @@ def ocr_word_acc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pred, gt) pairs derived from the documents table. levenshtein() is
     built-in on both engines; the per-row metric projection aggregates
     map-side."""
-    from my_ocr_spark.session import spread_small_scan
-
     # spread: levenshtein is O(len^2) per row and runs in the MAP-SIDE
     # partial-agg projection, i.e. in the scan stage — a 1-split
     # fixture scan ran the whole O(1.2G-cell) DP on one core
@@ -1387,49 +1370,32 @@ def gopher_counts(d: DataFrame, plant: bool = False) -> DataFrame:
     _GOPHER_PLANT_SQL). The keep gate stays pure integer math; docs
     without bigrams/5-grams pass vacuously (0 <= 0)."""
     from collections import Counter
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from my_ocr_spark.kernel.textstats import normalize_for_fingerprint
-    from my_ocr_spark.session import spread_small_scan
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_words", "top_word_n",
-                                   "n_bigrams", "top_bigram_n",
-                                   "n_5grams", "n_dup_5gram_pos", "keep")}
-            for doc, text in zip(pdf["doc_id"], pdf["text"]):
-                wl = normalize_for_fingerprint(text or "").split(" ")
-                if plant and doc % 17 == 0:
-                    wl = wl + wl[:5] * 8
-                n = len(wl)
-                top_word = max(Counter(wl).values())
-                if n >= 2:
-                    n_bi = n - 1
-                    top_bi = max(Counter(zip(wl, wl[1:])).values())
-                else:
-                    n_bi = top_bi = 0
-                if n >= 5:
-                    n5 = n - 4
-                    c5 = Counter(zip(wl, wl[1:], wl[2:], wl[3:], wl[4:]))
-                    d5 = sum(v for v in c5.values() if v > 1)
-                else:
-                    n5 = d5 = 0
-                out["doc_id"].append(doc)
-                out["n_words"].append(n)
-                out["top_word_n"].append(top_word)
-                out["n_bigrams"].append(n_bi)
-                out["top_bigram_n"].append(top_bi)
-                out["n_5grams"].append(n5)
-                out["n_dup_5gram_pos"].append(d5)
-                out["keep"].append(top_word * 100 <= 30 * n
-                                   and top_bi * 100 <= 20 * n_bi
-                                   and d5 * 100 <= 30 * n5)
-            yield pd.DataFrame(out)
+    def gopher_row(doc, text):
+        wl = normalize_for_fingerprint(text or "").split(" ")
+        if plant and doc % 17 == 0:
+            wl = wl + wl[:5] * 8
+        n = len(wl)
+        top_word = max(Counter(wl).values())
+        if n >= 2:
+            n_bi = n - 1
+            top_bi = max(Counter(zip(wl, wl[1:])).values())
+        else:
+            n_bi = top_bi = 0
+        if n >= 5:
+            n5 = n - 4
+            c5 = Counter(zip(wl, wl[1:], wl[2:], wl[3:], wl[4:]))
+            d5 = sum(v for v in c5.values() if v > 1)
+        else:
+            n5 = d5 = 0
+        yield (doc, n, top_word, n_bi, top_bi, n5, d5,
+               top_word * 100 <= 30 * n
+               and top_bi * 100 <= 20 * n_bi
+               and d5 * 100 <= 30 * n5)
 
-    return (spread_small_scan(d.select("doc_id", "text"))
-            .mapInPandas(run, schema=_GOPHER_SCHEMA))
+    return map_rows(d.select("doc_id", "text"), gopher_row, _GOPHER_SCHEMA)
 
 
 @query("gopher_repetition_filters", oracle=_gopher_oracle(plant=False))

@@ -98,6 +98,38 @@ def spread_small_scan(df, min_parallelism: int | None = None):
     return df
 
 
+def map_rows(df, fn, schema):
+    """The one per-row Python stage: ``fn(*row)`` gets each input row's
+    Python values in ``df.columns`` order and yields output tuples in
+    ``schema`` order — one for a 1:1 map, any number for an explode.
+
+    One ``mapInArrow`` over ``spread_small_scan(df)``: input columns
+    leave Arrow once per batch (``to_pylist``), and the output tuples
+    convert straight into one Arrow struct array typed from the Spark
+    schema (a DDL string is parsed with ``StructType.fromDDL``) — no
+    pandas frame and no Python-side transpose; a tuple of the wrong
+    arity fails the batch. The stage carries ``fn.__name__`` so the plan
+    names it. Per-task setup (memo dicts, index grids) belongs in
+    ``fn``'s closure: it is unpickled once per task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    row_type = pa.struct(list(to_arrow_schema(schema)))
+
+    def run(batches):
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
+            rows = [out for row in zip(*cols) for out in fn(*row)]
+            yield pa.RecordBatch.from_struct_array(
+                pa.array(rows, type=row_type))
+
+    run.__name__ = fn.__name__
+    return spread_small_scan(df).mapInArrow(run, schema=schema)
+
+
 def bucket_count(spark: SparkSession, per_slot: int = 4,
                  floor: int = 64) -> int:
     """Bucket fan-out for grouped-map operators (cogrouped matchers,

@@ -1,7 +1,7 @@
 """Streaming wrappers: incremental extraction + watermarked windowed aggs.
 
 * ``streaming_extract`` — readStream over a parquet/Iceberg docs directory,
-  the SAME extract_docs transform (mapInPandas is streaming-compatible),
+  the SAME extract_docs transform (mapInArrow is streaming-compatible),
   append-mode sink. Late/duplicate snapshots are handled downstream by
   latest_snapshot over the sink (batch compaction), because global
   row_number isn't available in append streams — the documented pattern.

@@ -37,11 +37,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from bench_scaling import host_cpu_ceiling  # noqa: E402
+from bench_scaling import ROOT, host_cpu_ceiling  # noqa: E402
 
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, sf_dir, copies, arrow = (sys.argv[1], sys.argv[2],
                                 int(sys.argv[3]), sys.argv[4])
 import os
@@ -84,7 +83,7 @@ _PASSES = 48
 def _make_fat_page(target_bytes: int, seed: int) -> bytes:
     """Deterministic fat page with the synthesizer's block structure:
     10-word paragraphs, body repeated to ~target size, real template."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from my_ocr_spark.plans.flagship import _HTML_PREFIX, _HTML_SUFFIX
     words = [f"tok{(seed * 31 + i) % 1499}" for i in range(200)]
     unit = "".join(" ".join(words[i:i + 10]) + " </p><p>"
@@ -94,7 +93,7 @@ def _make_fat_page(target_bytes: int, seed: int) -> bytes:
 
 
 def _kernel_work(worker_id: int) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from my_ocr_spark.kernel.extract import extract_main_text
     n = 0
     for _ in range(_PASSES):
@@ -145,7 +144,7 @@ def run_level(cores: int, sf_dir: str, copies: int, arrow: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", _CHILD, str(cores), sf_dir, str(copies),
          str(arrow)],
-        capture_output=True, text=True, timeout=1800, cwd="/root/repo",
+        capture_output=True, text=True, timeout=1800, cwd=ROOT,
         env=env)
     for line in reversed(out.stdout.strip().splitlines()):
         try:

@@ -19,9 +19,12 @@ import os
 import subprocess
 import sys
 
+# the checkout this script lives in; children run with it as cwd, so
+# `python -c` imports its package first
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores, sf_dir, copies = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from my_ocr_spark.session import get_spark
 from my_ocr_spark.operators.extract import extract_docs
@@ -103,7 +106,7 @@ def run_level(cores: int, sf_dir: str, copies: int) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", _CHILD, str(cores), sf_dir, str(copies)],
         capture_output=True, text=True, timeout=1800,
-        cwd="/root/repo", env=env)
+        cwd=ROOT, env=env)
     # accept a completed measurement even if the JVM died in its
     # shutdown hooks AFTER printing it (observed: DAGScheduler.stop
     # raising during SparkContext.stop turns a finished run into
@@ -161,7 +164,7 @@ def main() -> None:
                                          for x in r.values()))[len(runs) // 2]
     best32 = max(r[32]["docs_per_sec"] for r in runs)
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     r = mid[8]
     rows = "\n".join(
         f"| local[{c}] | {mid[c]['wall_sec']:.1f} | "
@@ -186,7 +189,7 @@ def main() -> None:
         f"Input: {r['n_docs']:,} synthesized Common-Crawl-style pages "
         f"({r['mb']:.0f} MB of HTML) from {sf_dir} ×{copies} "
         "amplification; job = full HTML parse + block scoring + "
-        "boilerplate strip + span emission (mapInPandas, single narrow "
+        "boilerplate strip + span emission (mapInArrow, single narrow "
         "stage, no shuffle of the html column).",
         "",
         "Representative (median-throughput) ladder:",
@@ -242,7 +245,7 @@ def main() -> None:
                        "engine_8_32_normalized": round(norm_8_32, 4)}]),
         "```",
     ]
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(json.dumps({"efficiency_4_16": round(eff_4_16, 4),
                       "efficiency_8_32": round(eff_8_32, 4),

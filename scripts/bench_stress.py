@@ -19,12 +19,16 @@ Usage: python scripts/bench_stress.py [sf_dir] [copies]
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
+# the checkout this script lives in; the child runs with it as cwd, so
+# `python -c` imports its package first
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
 import datetime, json, os, sys, threading, time
-sys.path.insert(0, "/root/repo")
 mode, sf_dir, copies = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from my_ocr_spark.session import get_spark
 from my_ocr_spark.operators.extract import extract_docs
@@ -89,7 +93,7 @@ except Exception:
 def run(mode: str, sf_dir: str, copies: int) -> dict:
     p = subprocess.run([sys.executable, "-c", _CHILD, mode, sf_dir,
                         str(copies)], capture_output=True, text=True,
-                       timeout=1800, cwd="/root/repo")
+                       timeout=1800, cwd=ROOT)
     if p.returncode != 0:
         raise RuntimeError(p.stderr[-2000:])
     return json.loads(p.stdout.strip().splitlines()[-1])

@@ -10,10 +10,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
+
+# the checkout this script lives in — never an installed or sibling copy
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -70,11 +74,20 @@ def value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def use_checkout() -> None:
+    """Import the package from ROOT on the driver and, through
+    PYTHONPATH (read when the session's JVM starts), on the Python
+    workers."""
+    sys.path.insert(0, ROOT)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
 
-    sys.path.insert(0, "/root/repo")
+    use_checkout()
     import __spark_entry__ as E
     from my_ocr_spark.session import get_spark
 

@@ -21,12 +21,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_correctness import TABLES, canon, value_hash  # noqa: E402
+from check_correctness import (  # noqa: E402
+    ROOT, TABLES, canon, use_checkout, value_hash)
 
-OUT = "/root/repo/scripts/sf01_results.jsonl"
+use_checkout()
+OUT = os.path.join(ROOT, "scripts", "sf01_results.jsonl")
 SF = "/root/testdata/sf0.1"
 
 

@@ -25,16 +25,18 @@ Usage: python scripts/check_sf10_agg.py <query_name> [sf_dir] [out]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_correctness import canon, value_hash  # noqa: E402
+from check_correctness import (  # noqa: E402
+    ROOT, canon, use_checkout, value_hash)
 
-SF_DIR = "/root/repo/localdata/sf1.0"
-OUT = "/root/repo/scripts/sf10_results.jsonl"
+use_checkout()
+SF_DIR = os.path.join(ROOT, "localdata", "sf1.0")
+OUT = os.path.join(ROOT, "scripts", "sf10_results.jsonl")
 
 # Per-query invariant spec: group expression (few dozen groups) and an
 # agg select-list valid on BOTH engines. Modular terms stay < 2^31 so

@@ -22,16 +22,18 @@ perturbs the checksum. Appends the verdict to scripts/sf10_results.jsonl.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_correctness import canon, value_hash  # noqa: E402
+from check_correctness import (  # noqa: E402
+    ROOT, canon, use_checkout, value_hash)
 
-SF_DIR = "/root/repo/localdata/sf1.0"
-OUT = "/root/repo/scripts/sf10_results.jsonl"
+use_checkout()
+SF_DIR = os.path.join(ROOT, "localdata", "sf1.0")
+OUT = os.path.join(ROOT, "scripts", "sf10_results.jsonl")
 
 # order-insensitive exact invariants per group; every term < 2^31 and
 # ~324M terms keep the BIGINT sums far from overflow

@@ -1,10 +1,13 @@
 """metrics API goldens + CLI end-to-end drive."""
 
 import json
+import pathlib
 import subprocess
 import sys
 
 from my_ocr_spark import metrics
+
+_ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 
 def test_ocr_text_metrics_exact(spark):
@@ -52,7 +55,7 @@ def test_cli_extract_end_to_end(spark, docs_df, tmp_path):
         [sys.executable, "-m", "my_ocr_spark", "extract",
          "--input", src, "--output", out,
          "--master", "local[2]", "--buckets", "2"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo")
+        capture_output=True, text=True, timeout=420, cwd=_ROOT)
     assert p.returncode == 0, p.stderr[-1500:]
     stats = json.loads(p.stdout.strip().splitlines()[-1])
     assert sorted(stats["written"]) == [0, 1]
@@ -71,7 +74,7 @@ def test_cli_curate_end_to_end(spark, docs_df, tmp_path):
     p = subprocess.run(
         [sys.executable, "-m", "my_ocr_spark", "curate",
          "--input", src, "--output", out_dir, "--master", "local[2]"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo")
+        capture_output=True, text=True, timeout=420, cwd=_ROOT)
     assert p.returncode == 0, p.stderr[-1500:]
     stats = json.loads(p.stdout.strip().splitlines()[-1])
     assert stats["cmd"] == "curate" and stats["n_docs"] > 0

@@ -12,12 +12,47 @@ def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _node_names(plan: str) -> list[str]:
+    """The operator name heading each plan-node line, with the tree
+    drawing (``+-``, ``:``) and codegen marker (``*(1)``) stripped — so
+    a name that only appears in a node's arguments (``ReusedExchange
+    [..], Exchange hashpartitioning``) is never counted as a node."""
+    return re.findall(r"^[ \t:+\-|]*(?:\*\(\d+\) )?(\w+)", plan,
+                      re.MULTILINE)
+
+
 def _n_exchanges(plan: str) -> int:
-    """Count Exchange nodes without also matching ReusedExchange
-    (plan.count("Exchange") counts the substring inside "ReusedExchange",
-    so a plan where Spark reuses an exchange would fail an equality
-    assertion spuriously)."""
-    return len(re.findall(r"(?<!Reused)Exchange", plan))
+    """Count shuffle/broadcast Exchange nodes; ReusedExchange nodes
+    re-read an exchange counted elsewhere and are skipped."""
+    return sum(n in ("Exchange", "BroadcastExchange")
+               for n in _node_names(plan))
+
+
+def _n_python_maps(plan: str) -> int:
+    """Count per-batch Python map nodes of either kind (map_rows stages
+    plan as MapInArrow, the batch-vectorized stages as MapInPandas)."""
+    return sum(n in ("MapInPandas", "MapInArrow")
+               for n in _node_names(plan))
+
+
+def test_n_exchanges_skips_reused_exchange():
+    """Spark prints the reused exchange's description inside the
+    ReusedExchange line; only the real Exchange node counts."""
+    plan = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=false",
+        "+- SortMergeJoin [k#1L], [k#2L], Inner",
+        "   :- *(1) Sort [k#1L ASC NULLS FIRST], false, 0",
+        "   :  +- Exchange hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS,"
+        " [plan_id=10]",
+        "   :     +- Scan parquet [k#1L]",
+        "   +- *(2) Sort [k#2L ASC NULLS FIRST], false, 0",
+        "      +- ReusedExchange [k#2L], Exchange hashpartitioning(k#1L,"
+        " 4), ENSURE_REQUIREMENTS, [plan_id=10]",
+    ])
+    assert _node_names(plan) == [
+        "AdaptiveSparkPlan", "SortMergeJoin", "Sort", "Exchange", "Scan",
+        "Sort", "ReusedExchange"]
+    assert _n_exchanges(plan) == 1
 
 
 @pytest.fixture(scope="module")
@@ -133,7 +168,7 @@ def test_ngram_jaccard_postings_consumers(spark, sf_dir):
     from my_ocr_spark.plans.registry import QUERIES, t
     import my_ocr_spark.plans.textpipe  # noqa: F401
     plan = _physical_plan(QUERIES["ngram_jaccard_dups"](spark, sf_dir))
-    assert plan.count("MapInPandas") <= 3, plan
+    assert _n_python_maps(plan) <= 3, plan
     docs = t(spark, sf_dir, "documents")
     cached = ngram_jaccard_pairs(docs, "doc_id", "text", n=4,
                                  threshold=0.2, persist_postings=True)
@@ -168,7 +203,7 @@ def test_reading_order_single_shuffle_streaming_map(spark, sf_dir):
     from my_ocr_spark.plans.analytics import pdf_reading_order
     plan = _physical_plan(pdf_reading_order(spark, sf_dir))
     assert "FlatMapGroupsInPandas" not in plan, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert _n_python_maps(plan) == 1, plan
 
 
 def test_grouped_map_buckets_track_parallelism(spark, sf_dir):
@@ -206,8 +241,8 @@ def test_minhash_verify_stage_is_jvm_side(spark, sf_dir):
 
 def test_pixel_kernel_queries_are_narrow(spark, sf_dir):
     """The three per-row pixel/shape oracle queries (Fourier roundtrip,
-    hole filling, skeletonize) must stay a single narrow mapInPandas
-    over the scan — no exchange, no join: per-mask work never needs
+    hole filling, skeletonize) must stay a single narrow Python map
+    stage over the scan — no exchange, no join: per-mask work never needs
     other rows."""
     from my_ocr_spark.plans.geometry import (
         centralize_normals, db_decode_boundaries, fill_holes_mask,
@@ -227,7 +262,7 @@ def test_pixel_kernel_queries_are_narrow(spark, sf_dir):
             (q.__name__, plan)
         assert n_ex <= 1, (q.__name__, plan)
         assert "Join" not in plan, (q.__name__, plan)
-        assert plan.count("MapInPandas") == 1, (q.__name__, plan)
+        assert _n_python_maps(plan) == 1, (q.__name__, plan)
 
 
 def test_gopher_filters_single_narrow_pass(spark, sf_dir):
@@ -240,7 +275,7 @@ def test_gopher_filters_single_narrow_pass(spark, sf_dir):
     small fixture."""
     from my_ocr_spark.plans.textpipe import gopher_repetition_filters
     plan = _physical_plan(gopher_repetition_filters(spark, sf_dir))
-    assert plan.count("MapInPandas") == 1, plan
+    assert _n_python_maps(plan) == 1, plan
     assert "Join" not in plan, plan
     n_ex = _n_exchanges(plan)
     assert n_ex == plan.count("Exchange RoundRobinPartitioning"), plan

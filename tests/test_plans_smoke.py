@@ -47,7 +47,8 @@ def test_bench_headline_names_are_registered():
 
     import __spark_entry__ as E
 
-    src = pathlib.Path("/root/repo/bench.py").read_text()
+    src = (pathlib.Path(__file__).resolve().parents[1]
+           / "bench.py").read_text()
     tree = ast.parse(src)
     names = None
     for node in ast.walk(tree):

@@ -4,6 +4,7 @@ keep/drop markers, CLI subcommand end-to-end."""
 from __future__ import annotations
 
 import json
+import pathlib
 import subprocess
 import sys
 
@@ -12,6 +13,8 @@ from my_ocr_spark.functions.vis import (
     render_page_html,
     vis_sample,
 )
+
+_ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 _PAGE = (b"<html><head><title>T&amp;Co</title></head><body>"
          b"<nav><a href=/x>home about contact pricing support</a></nav>"
@@ -63,7 +66,7 @@ def test_cli_vis_end_to_end(spark, docs_df, tmp_path):
         [sys.executable, "-m", "my_ocr_spark", "vis",
          "--input", src, "--output", out, "--n", "2",
          "--master", "local[2]"],
-        capture_output=True, text=True, timeout=420, cwd="/root/repo")
+        capture_output=True, text=True, timeout=420, cwd=_ROOT)
     assert p.returncode == 0, p.stderr[-1500:]
     stats = json.loads(p.stdout.strip().splitlines()[-1])
     assert stats["n_docs"] == 2
