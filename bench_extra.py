@@ -22,14 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "pricing_summary", "top_revenue_nation", "sessionize_events",
-    "iou_theta_join_match", "hmean_per_image", "topk_per_group",
-    "ngram_jaccard_dups", "embedding_cosine_topk", "minhash_lsh_candidates",
-    "pdf_reading_order", "interval_range_join", "semantic_dedup_keep",
-    "duplicate_span_pairs", "gopher_repetition_filters",
-    "curation_mix_report", "db_decode_boundaries",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:

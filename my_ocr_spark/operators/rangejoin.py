@@ -51,12 +51,22 @@ def band_overlap_join(
     truncated bucket index ``cast(coord / width as bigint)`` fits in a
     signed ``fuse_bits``-bit range (|coord| < width * 2^(fuse_bits-1) —
     half a million widths at the default), so
-    ``group * 2^fuse_bits + bucket`` is injective."""
+    ``group * 2^fuse_bits + bucket`` is injective. A bucket outside that
+    range raises instead of aliasing into a neighbouring group's keys
+    (an inline check on each row's start and end bucket: no extra job);
+    a null coordinate still drops the row."""
     r = right
     for c in right.columns:
         r = r.withColumnRenamed(c, c + suffix)
     g_r, s_r, e_r = group + suffix, start + suffix, end + suffix
     mult = 1 << fuse_bits
+    half = 1 << (fuse_bits - 1)
+
+    def bucket(coord: str):
+        b = (F.col(coord) / width).cast("bigint")
+        return F.when(F.abs(b) >= half, F.raise_error(
+            f"band_overlap_join: {coord} / width {width} is outside the "
+            f"fused key's {fuse_bits}-bit bucket range")).otherwise(b)
 
     # One FUSED long key (group * 2^fuse_bits + bucket) instead of the
     # (group, bucket) pair, and each side's START bucket carried as an
@@ -68,16 +78,14 @@ def band_overlap_join(
     # (trunc(max(s, s_r)/W) == max(trunc(s/W), trunc(s_r/W)) because
     # truncation toward zero is monotone non-decreasing, so the integer
     # max IS the intersection-start bucket.)
-    lb = (left.withColumn("_sb", (F.col(start) / width).cast("bigint"))
+    lb = (left.withColumn("_sb", bucket(start))
               .withColumn("_k", F.explode(F.sequence(
                   F.col(group) * mult + F.col("_sb"),
-                  F.col(group) * mult
-                  + (F.col(end) / width).cast("bigint")))))
-    rb = (r.withColumn("_sb_r", (F.col(s_r) / width).cast("bigint"))
+                  F.col(group) * mult + bucket(end)))))
+    rb = (r.withColumn("_sb_r", bucket(s_r))
            .withColumn("_k_r", F.explode(F.sequence(
                F.col(g_r) * mult + F.col("_sb_r"),
-               F.col(g_r) * mult
-               + (F.col(e_r) / width).cast("bigint")))))
+               F.col(g_r) * mult + bucket(e_r)))))
     # Shuffled-hash, not sort-merge: the bucket key is
     # deliberately low-cardinality-per-cell but HIGH-fanout (each cell
     # emits |A_c|x|B_c| pairs), and SMJ's pair generation iterates the

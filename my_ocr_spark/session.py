@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the north_rule's execution profile: Arrow-batched pandas UDFs over
-fat binary ``html`` rows, AQE for runtime re-planning / skew mitigation,
-shuffle partition count sized to local cores here but overridable for a real
-cluster via normal spark-submit confs (these are only defaults, set with
-``.config`` so submit-time ``--conf`` wins).
+Tuned for the north_rule's execution profile: Arrow-batched Python stages
+(``mapInArrow`` / ``mapInPandas``) over fat binary ``html`` rows, with each
+input batch bounded by a fixed byte budget (``ARROW_MAX_BYTES_PER_BATCH``),
+AQE for runtime re-planning / skew mitigation, and a shuffle partition count
+sized to local cores here but overridable for a real cluster via normal
+spark-submit confs.
 """
 
 from __future__ import annotations
@@ -12,6 +13,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The one Arrow batch policy: every batch handed to a Python stage
+# closes at the first row past this many bytes. Pages range from ~1 KB
+# to multi-MB, so any row count suits one corpus and is wrong for the
+# next (thin pages want ~4k rows a batch, fat ones ~32); the byte
+# budget gives ~4.6k-row batches of 0.9 KB pages and 42-row batches of
+# 100 KB pages with no per-corpus setting. 4 MiB: the fat-page sweep
+# found 2-8 MB batches within 5% of each other, thin pages are past
+# the per-batch fixed cost that cost 4x at small batches, and a
+# worker's input stays a few MB where Spark's own 64 MiB default let
+# one fat-page batch reach 20 MB. Spark's 10000-row cap still bounds
+# batches of narrow rows.
+ARROW_MAX_BYTES_PER_BATCH = 4 << 20
 
 
 def get_spark(app_name: str = "my_ocr_spark",
@@ -44,17 +58,11 @@ def get_spark(app_name: str = "my_ocr_spark",
         # 64k keeps coalescing for genuinely tiny partitions while never
         # binding at corpus scale, where partitions are 100s of MB.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+                "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for pandas UDFs. The real constraint is BYTES/batch; only
-        # the row cap is set here (spark.sql.execution.arrow.
-        # maxBytesPerBatch also exists in 4.1): pick rows ≈ target_bytes
-        # / page_size. Small synthetic pages (~1 KB) want 2048-4096 (Arrow
-        # per-batch overhead dominates below that — measured 4×); multi-MB
-        # real pages want 64-256. Env-tunable per corpus.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_MAX_BYTES_PER_BATCH))
         # read-side split size: at 100 TB this governs task count; 128 MB
         # default is fine, set explicitly for visibility.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

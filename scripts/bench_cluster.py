@@ -42,6 +42,7 @@ sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 from bench_scaling import host_cpu_ceiling  # noqa: E402
+from my_ocr_spark.session import ARROW_MAX_BYTES_PER_BATCH  # noqa: E402
 
 SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 SPARK_CLASS = os.path.join(SPARK_HOME, "bin", "spark-class")
@@ -251,8 +252,8 @@ def _submit(c: Cluster, n_workers: int, sf_dir: str, copies: int,
          # match the tuned session defaults the local ladder gets via
          # get_spark (the job builds a bare session so submit-time
          # conf wins — session.py precedence note)
-         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch="
-                   + os.environ.get("SPARK_GRAFT_ARROW_BATCH", "1024"),
+         "--conf", "spark.sql.execution.arrow.maxBytesPerBatch="
+                   f"{ARROW_MAX_BYTES_PER_BATCH}",
          "--conf", "spark.sql.adaptive.enabled=true",
          # the dedup-shuffle metric moves ~100 MB of narrow rows;
          # default 64 MB advisory size would coalesce it to ~2

@@ -4,14 +4,11 @@ The headline bench corpus averages ~0.9 KB/page, which under-represents
 real Common-Crawl pages (tens of KB) and over-weights Arrow per-batch
 fixed costs. This bench runs the SAME extraction job over
 ``synthesize_fat_docs`` (log-normal html size: mean ~60 KB, multi-MB
-tail, 4 MB cap) and reports docs/s + MB/s:
-
-1. an Arrow-batch sweep at local[32] (maxRecordsPerBatch is Spark's
-   only knob, but the real constraint is BYTES/batch — fat pages want
-   far fewer rows per batch than 1 KB pages), then
-2. the standard N vs 4N ladder (local[8] vs local[32], fresh JVM per
-   level) at the chosen batch size, with TWO paired Spark-free host
-   probes per ladder:
+tail, 4 MB cap) and reports docs/s + MB/s over the standard N vs 4N
+ladder (local[8] vs local[32], fresh JVM per level) at the package's
+defaults — Arrow batches are bounded by ``get_spark``'s byte budget, so
+fat pages need no per-corpus batch setting — with TWO paired Spark-free
+host probes per ladder:
 
    - the generic md5 probe (``bench_scaling.host_cpu_ceiling``), and
    - a WORKLOAD-MATCHED kernel probe (``fat_kernel_ceiling``):
@@ -41,16 +38,13 @@ from bench_scaling import ROOT, host_cpu_ceiling  # noqa: E402
 
 _CHILD = r"""
 import json, sys, time
-cores, sf_dir, copies, arrow = (sys.argv[1], sys.argv[2],
-                                int(sys.argv[3]), sys.argv[4])
-import os
-os.environ["SPARK_GRAFT_ARROW_BATCH"] = arrow
+cores, sf_dir, copies = sys.argv[1], sys.argv[2], int(sys.argv[3])
 from my_ocr_spark.session import get_spark
 from my_ocr_spark.operators.extract import extract_docs
 from my_ocr_spark.plans.flagship import synthesize_fat_docs
 from pyspark.sql import functions as F
 
-spark = get_spark(app_name=f"fat-{cores}-{arrow}",
+spark = get_spark(app_name=f"fat-{cores}",
                   master=f"local[{cores}]", shuffle_partitions=int(cores))
 spark.sparkContext.setLogLevel("ERROR")
 corpus = synthesize_fat_docs(spark, sf_dir, copies=copies)
@@ -63,9 +57,8 @@ t0 = time.perf_counter()
 n_out = extract_docs(corpus).count()
 wall = time.perf_counter() - t0
 assert n_out == n_docs
-print(json.dumps({"cores": int(cores), "arrow_batch": int(arrow),
-                  "n_docs": int(n_docs), "mb": n_bytes / 1e6,
-                  "wall_sec": round(wall, 2),
+print(json.dumps({"cores": int(cores), "n_docs": int(n_docs),
+                  "mb": n_bytes / 1e6, "wall_sec": round(wall, 2),
                   "docs_per_sec": round(n_docs / wall),
                   "mb_per_sec": round(n_bytes / 1e6 / wall, 1)}),
       flush=True)
@@ -135,15 +128,14 @@ def fat_kernel_ceiling() -> dict:
     }
 
 
-def run_level(cores: int, sf_dir: str, copies: int, arrow: int) -> dict:
+def run_level(cores: int, sf_dir: str, copies: int) -> dict:
     # same GC pinning as bench_scaling.run_level: without it the
     # saturated 32-thread level pays GC-vs-task contention that the
     # 8-thread level doesn't, depressing measured efficiency.
     env = dict(os.environ,
                SPARK_GRAFT_JAVA_OPTS="-XX:ParallelGCThreads=4")
     out = subprocess.run(
-        [sys.executable, "-c", _CHILD, str(cores), sf_dir, str(copies),
-         str(arrow)],
+        [sys.executable, "-c", _CHILD, str(cores), sf_dir, str(copies)],
         capture_output=True, text=True, timeout=1800, cwd=ROOT,
         env=env)
     for line in reversed(out.stdout.strip().splitlines()):
@@ -153,7 +145,7 @@ def run_level(cores: int, sf_dir: str, copies: int, arrow: int) -> dict:
             continue
         if isinstance(parsed, dict) and "wall_sec" in parsed:
             return parsed
-    raise RuntimeError(f"fat level {cores}/{arrow}: no measurement "
+    raise RuntimeError(f"fat level {cores}: no measurement "
                        f"(rc={out.returncode}); {out.stderr[-2000:]}")
 
 
@@ -162,26 +154,13 @@ def main() -> None:
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     ladders = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    # at ~60 KB mean page size these are ~0.5 / 2 / 8 MB Arrow batches;
-    # partitions are parallelism*16, so rows/partition stays above the
-    # largest batch only at the smallest sizes — the sweep's point is
-    # bytes-per-batch, not rows.
-    sweep = []
-    for arrow in (8, 32, 128):
-        r = run_level(32, sf_dir, copies, arrow)
-        sweep.append(r)
-        print(json.dumps(r), flush=True)
-    best = max(sweep, key=lambda r: r["mb_per_sec"])
-    arrow = best["arrow_batch"]
-    print(json.dumps({"chosen_arrow_batch": arrow}), flush=True)
-
     runs, probes, kprobes = [], [], []
     for _ in range(ladders):
         probes.append(host_cpu_ceiling())
         print(json.dumps(probes[-1]), flush=True)
         kprobes.append(fat_kernel_ceiling())
         print(json.dumps(kprobes[-1]), flush=True)
-        ladder = {c: run_level(c, sf_dir, copies, arrow) for c in (8, 32)}
+        ladder = {c: run_level(c, sf_dir, copies) for c in (8, 32)}
         for c in (8, 32):
             print(json.dumps(ladder[c]), flush=True)
         runs.append(ladder)

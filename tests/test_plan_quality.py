@@ -206,6 +206,29 @@ def test_reading_order_single_shuffle_streaming_map(spark, sf_dir):
     assert _n_python_maps(plan) == 1, plan
 
 
+
+def test_reading_order_carry_is_batch_size_invariant(spark, sf_dir):
+    """pdf_reading_order carries a page that straddles an Arrow batch
+    boundary into the next batch. A 3-row cap puts nearly every page
+    across a boundary (pages hold 1-7 boxes), so the output must match
+    the same query at the session's own batch size."""
+    from my_ocr_spark.plans.analytics import pdf_reading_order
+
+    def run():
+        return (pdf_reading_order(spark, sf_dir).toPandas()
+                .sort_values("page_key").reset_index(drop=True))
+
+    want = run()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = run()
+    finally:
+        spark.conf.set(key, old)
+    assert len(want) > 0
+    assert got.equals(want)
+
 def test_grouped_map_buckets_track_parallelism(spark, sf_dir):
     """Grouped-map fan-out must scale with the session, not a constant:
     the cogrouped IoU matcher's and the KNN operator's bucket expressions

@@ -42,19 +42,9 @@ def test_entry_smoke(spark):
 def test_bench_headline_names_are_registered():
     """bench.py drives queries() by name — a rename or typo would break
     the driver's per-round benchmark, so pin the membership here."""
-    import ast
-    import pathlib
-
     import __spark_entry__ as E
+    from bench import HEADLINE
 
-    src = (pathlib.Path(__file__).resolve().parents[1]
-           / "bench.py").read_text()
-    tree = ast.parse(src)
-    names = None
-    for node in ast.walk(tree):
-        if (isinstance(node, ast.Assign)
-                and getattr(node.targets[0], "id", None) == "headline"):
-            names = [ast.literal_eval(e) for e in node.value.elts]
-    assert names, "headline list not found in bench.py"
-    missing = [n for n in names if n not in E.queries()]
+    assert HEADLINE, "bench.HEADLINE is empty"
+    missing = [n for n in HEADLINE if n not in E.queries()]
     assert not missing, missing

@@ -66,3 +66,17 @@ def test_different_groups_never_match(spark):
     left = _mk(spark, [(1, 0, 0.0, 100.0)], "l")
     right = _mk(spark, [(2, 1, 0.0, 100.0)], "r")
     assert band_overlap_join(left, right, width=64.0).count() == 0
+
+
+def test_out_of_contract_bucket_raises_instead_of_wrong_pair(spark):
+    """A right interval in group 0 whose end bucket passes 2^19 (the
+    default fuse_bits=20 contract) explodes onto fused keys that belong
+    to group 1; with the left interval's start bucket on one of them,
+    the join without a bucket-range check emits this cross-group pair."""
+    from my_ocr_spark.operators.rangejoin import band_overlap_join
+
+    w, half = 64.0, 1 << 19
+    left = _mk(spark, [(1, 1, -(half - 1) * w, -(half - 8) * w)], "l")
+    right = _mk(spark, [(2, 0, -(half - 1) * w, (half + 1.5) * w)], "r")
+    with pytest.raises(Exception, match="fused key"):
+        band_overlap_join(left, right, width=w).collect()
