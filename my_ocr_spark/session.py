@@ -5,7 +5,9 @@ Tuned for the north_rule's execution profile: Arrow-batched Python stages
 input batch bounded by a fixed byte budget (``ARROW_MAX_BYTES_PER_BATCH``),
 AQE for runtime re-planning / skew mitigation, and a shuffle partition count
 sized to local cores here but overridable for a real cluster via normal
-spark-submit confs.
+spark-submit confs. Local sessions whose package was loaded from a directory
+also start their Python workers through ``worker_daemon``, so workers import
+the installed pyspark instead of ``$SPARK_HOME``'s source-only ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -77,6 +79,23 @@ def get_spark(app_name: str = "my_ocr_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if master.split("[")[0] == "local" and os.path.isfile(__file__):
+        # Python workers import the installed pyspark, not $SPARK_HOME's
+        # source-only pyspark.zip (worker_daemon.py; it keeps the zip
+        # unless the two are the same release). Measured on a 4-core
+        # host: every task's importlib.invalidate_caches() re-read the
+        # archives' central directories for 0.15-0.26 s, now 0.1 ms;
+        # importing pyspark.daemon takes 1.3 s from the zip, 0.3 s
+        # installed; an identity mapInArrow of 4.2 MB took 0.71 s, now
+        # 0.03 s. The daemon imports this package before the first
+        # task, so only a package loaded from a directory qualifies
+        # (one in a --py-files zip reaches workers at task time), and
+        # that directory's parent goes on the workers' PYTHONPATH
+        # whatever the working directory.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        b = (b.config("spark.python.daemon.module",
+                      "my_ocr_spark.worker_daemon")
+             .config("spark.executorEnv.PYTHONPATH", root))
     # e.g. "-XX:ParallelGCThreads=4" — the scaling bench pins GC threads
     # so the saturated full-width level doesn't pay GC-vs-task contention
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")

@@ -81,8 +81,9 @@ def test_write_with_lineage_leaves_session_conf(spark, tmp_path):
 
 def test_write_with_lineage_cost_flat_in_buckets(spark, docs_df, tmp_path):
     """The commit runs the same Spark jobs at 2 and at 16 buckets, and
-    leaves nothing cached after either of two sequential corpora (RDDs
-    other tests of this session left persisted are not its own)."""
+    adds no persisted RDD in either of two sequential corpora. Only
+    additions count: RDDs other tests of this session left persisted
+    are not its own, and the context cleaner may drop them mid-test."""
     sc = spark.sparkContext
     df = docs_df.select("url", "text")
 
@@ -100,7 +101,7 @@ def test_write_with_lineage_cost_flat_in_buckets(spark, docs_df, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert stats["written"] == list(range(n_buckets))
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert cached() == others, tag
+        assert not (cached() - others), tag
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     jobs_2 = run(df, 2, "a2")
