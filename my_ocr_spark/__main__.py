@@ -99,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
             .parquet(args.output))
         # counts from the written files: counting `out` would re-run
         # the whole extract → dedup pipeline once per action
-        n = (spark.read.parquet(args.output)
+        n = (spark.read.schema(out.schema).parquet(args.output)
              .agg(F.count("*").alias("n_docs"),
                   F.count_if("keep").alias("n_kept")).collect()[0])
         print(json.dumps({"cmd": "curate", "output": args.output,

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from my_ocr_spark.operators.extract import extract_docs, latest_snapshot
+from my_ocr_spark.sources.catalog import read_table
 
 _HTML_PREFIX = (
     '<!DOCTYPE html><html><head><title>doc</title>'
@@ -38,7 +39,7 @@ def synthesize_cc_docs(spark: SparkSession, sf_dir: str,
     synthesis — the small parquet file otherwise reads as one split and
     serializes every downstream pandas-UDF stage onto one core. The fat
     html column is built after the shuffle, so it never crosses one."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     if partitions:
         docs = docs.repartition(partitions, F.col("doc_id"))
     return docs.select(
@@ -88,7 +89,7 @@ def synthesize_fat_docs(spark: SparkSession, sf_dir: str,
     skewed: small tasks let dynamic scheduling absorb the tail
     (measured: 128 coarse partitions at local[32] cost ~2x in stage
     wall vs fine partitions purely from end-of-stage stragglers)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     if copies > 1:
         docs = (docs.withColumn(
                     "copy", F.explode(F.sequence(F.lit(0),
@@ -145,7 +146,7 @@ def synthesize_fat_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     the paragraphized text plus its own closing break, so copies never
     merge mid-paragraph and the per-copy chunk structure equals the thin
     page's (the proven extract_maincontent closed form)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     docs = docs.repartition(spark.sparkContext.defaultParallelism * 4,
                             F.col("doc_id"))
     k = F.when(

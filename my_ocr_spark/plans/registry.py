@@ -12,6 +12,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from my_ocr_spark.sources.catalog import read_table
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -26,4 +28,4 @@ def query(name: str, oracle: str | None = None):
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_table(spark, f"{sf_dir}/{name}.parquet")

@@ -39,7 +39,8 @@ def get_spark(app_name: str = "my_ocr_spark",
     would hijack a spark-submit job. A cluster job must either pass
     ``master=`` explicitly / set SPARK_GRAFT_MASTER, or build its own
     SparkSession — the package itself never requires this factory."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     master = (master or os.environ.get("SPARK_GRAFT_MASTER")
               or f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or int(cpus)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from my_ocr_spark.sources.catalog import read_table
+
 
 def read_annotation_lines(spark: SparkSession, path: str) -> DataFrame:
     """HardDiskLoader: whole annotation file as lines (one string column
@@ -77,7 +79,7 @@ def load_kv_table(spark: SparkSession, path: str,
     lazy env (loader.py:156-165) maps to the parquet reader's per-task
     file handles — nothing to manage. Sorting/bucketing by the key at
     write time gives point-lookup pruning via min/max stats."""
-    return spark.read.parquet(path)
+    return read_table(spark, path)
 
 
 def write_partitioned_by_correctness(df: DataFrame, out_dir: str,

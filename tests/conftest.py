@@ -1,3 +1,5 @@
+import itertools
+
 import pytest
 
 from my_ocr_spark.session import get_spark
@@ -22,3 +24,25 @@ def docs_df(spark, docs_rows):
     data = [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
             for r in docs_rows]
     return spark.createDataFrame(data, schema=DOCS_SCHEMA)
+
+
+_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under its own job group and returns
+    (its result, the number of Spark jobs the status tracker saw it
+    start)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{next(_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

@@ -350,3 +350,15 @@ def test_round7_spread_and_filter_pushdown_gates(spark, sf_dir):
             if "Scan parquet" in line or "FileScan" in line:
                 assert "regexp_extract" not in line, (q.__name__, line)
                 assert "from_json" not in line, (q.__name__, line)
+
+
+def test_rebuilt_plans_run_no_jobs(spark, sf_dir, count_jobs):
+    """Building a query again reads every table with the schema its
+    first build inferred, so it starts no Spark job before an action
+    (each schema-less parquet read would start one)."""
+    from my_ocr_spark.plans.analytics import top_revenue_nation
+    from my_ocr_spark.plans.relational import interval_range_join
+    for query in (top_revenue_nation, interval_range_join):
+        query(spark, sf_dir)
+        _, jobs = count_jobs(lambda: query(spark, sf_dir))
+        assert jobs == 0, query.__name__

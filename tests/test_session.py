@@ -92,6 +92,17 @@ def test_get_spark_names_the_daemon_for_local_masters(monkeypatch):
     assert key not in get_spark(master="spark://127.0.0.1:7077")
 
 
+def test_get_spark_defaults_to_the_host_cores(monkeypatch):
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    cores = len(os.sched_getaffinity(0))
+    conf = get_spark()
+    assert conf["spark.master"] == f"local[{cores}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(cores)
+
+
 # A job that builds its session with get_spark and runs a Python task
 # which imports the package; argv[1:] go first on the driver's sys.path.
 _JOB = """
