@@ -9,12 +9,10 @@ as composable library calls.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 from my_ocr_spark.kernel.codec import char_precision_recall
+from my_ocr_spark.session import map_rows
 
 
 def ocr_text_metrics(pairs: DataFrame, pred_col: str = "pred",
@@ -37,32 +35,21 @@ def ocr_text_metrics(pairs: DataFrame, pred_col: str = "pred",
     )
 
 
-_CHAR_OUT = T.StructType([
-    T.StructField("n", T.LongType(), False),
-    T.StructField("sp", T.DoubleType(), False),
-    T.StructField("sr", T.DoubleType(), False),
-])
-
-
 def char_metrics(pairs: DataFrame, pred_col: str = "pred",
                  gt_col: str = "gt") -> DataFrame:
-    """Mean char precision/recall via LCS matching (ocr_metric.py:7-81);
-    kernel pandas UDF with map-side partial sums."""
+    """Mean char precision/recall via LCS matching (ocr_metric.py:7-81):
+    the kernel's per-pair values from one per-row stage, averaged by
+    Spark — so, like ``ocr_text_metrics``, an empty input gives
+    ``n_pairs`` 0 and null means."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n, sp, sr = 0, 0.0, 0.0
-        for pdf in batches:
-            for p_, g_ in zip(pdf[pred_col], pdf[gt_col]):
-                p, r = char_precision_recall(p_ or "", g_ or "")
-                n, sp, sr = n + 1, sp + p, sr + r
-        yield pd.DataFrame({"n": [n], "sp": [sp], "sr": [sr]})
+    def char_pr(pred, gt):
+        yield char_precision_recall(pred or "", gt or "")
 
-    part = pairs.select(pred_col, gt_col).mapInPandas(run, schema=_CHAR_OUT)
-    return part.agg(
-        F.sum("n").alias("n_pairs"),
-        (F.sum("sp") / F.sum("n")).alias("mean_char_precision"),
-        (F.sum("sr") / F.sum("n")).alias("mean_char_recall"),
-    )
+    per = map_rows(pairs.select(pred_col, gt_col), char_pr,
+                   "p double, r double")
+    return per.agg(F.count("*").alias("n_pairs"),
+                   F.avg("p").alias("mean_char_precision"),
+                   F.avg("r").alias("mean_char_recall"))
 
 
 def detection_hmean(gt: DataFrame, pred: DataFrame,

@@ -4,8 +4,8 @@
 * n-gram Jaccard — exact set similarity via inverted-index self-join
   (scales: the join key is the shingle, pairs sharing >=1 shingle are a
   superset of pairs with J>0, so the result is exact, not approximate)
-* MinHash + LSH banding — signature via Arrow-batched pandas UDF over the
-  pure kernel, candidate pairs via band-hash self-join
+* MinHash + LSH banding — signature via one batch-level Python stage over
+  the pure kernel, candidate pairs via band-hash self-join
 * SimHash — 64-bit signature, 4x16-bit band join → hamming<=3 candidates
 
 The reference has no dedup surface; these are the web-scale additions the
@@ -15,14 +15,12 @@ kernel/textstats primitives as the extraction engine.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from my_ocr_spark.kernel import textstats as ts
-from my_ocr_spark.session import map_rows, spread_small_scan
+from my_ocr_spark.session import map_batches, map_rows, spread_small_scan
 
 # portable normalization used on BOTH engines (same regex in oracle SQL)
 NORMALIZE_RE = "[^a-z0-9一-龥 ]"
@@ -53,8 +51,7 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 1, threshold: float = 0.5,
-                        df_cap: int | None = 64,
-                        persist_postings: bool = True) -> DataFrame:
+                        df_cap: int | None = 64) -> DataFrame:
     """Exact n-gram Jaccard duplicate pairs via inverted-index self-join.
 
     Stages: distinct shingles per doc (narrow) → document-frequency cap →
@@ -104,7 +101,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # postings feeds THREE consumers (pairs, sizes->s1, sizes->s2) whose
     # column pruning makes the exchange subtrees non-identical, so
     # Spark's ReuseExchange does NOT fire (verified) and the shingle
-    # generation re-runs per consumer. ``persist_postings`` is the
+    # generation re-runs per consumer. Persisting postings is the
     # materialization point for that: lazy (the query contract stays
     # action-free), disk-backed, LRU-evicted. A/B history: at sf0.1
     # (fresh JVMs, single cold run) persist LOST — 10.6 s vs 7.7 s —
@@ -113,18 +110,17 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # original note predicted (same-session A/B, best-of-2 fresh plans:
     # 3.7-5.8 s unpersisted vs 2.1-2.6 s persisted — three full
     # shingle-gen passes vs one disk-backed postings table), so the
-    # flag now defaults ON; persisting the pre-agg shingle rows too was
-    # within noise of postings-only and pins twice the memory. Callers
-    # processing many corpora in one session should unpersist via
-    # spark.catalog.clearCache between corpora (same note as the LSH
-    # band-row cache below).
+    # postings are always persisted; persisting the pre-agg shingle
+    # rows too was within noise of postings-only and pins twice the
+    # memory. Callers processing many corpora in one session should
+    # unpersist via spark.catalog.clearCache between corpora (same note
+    # as the LSH band-row cache below).
     postings = (sh.groupBy("shingle")
                   .agg(F.count("*").alias("df_"),
                        F.sort_array(F.collect_list("doc")).alias("docs")))
     if df_cap is not None:
         postings = postings.filter(F.col("df_") <= df_cap)
-    if persist_postings:
-        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+    postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = (postings.select(F.explode("docs").alias("doc"))
                      .groupBy("doc").agg(F.count("*").alias("sz")))
     pairs = (postings.filter(F.col("df_") >= 2)
@@ -157,52 +153,42 @@ def minhash_band_rows(df: DataFrame, id_col: str, text_col: str,
                       shingle_k: int = 3) -> DataFrame:
     """(doc, band, band_hash) rows — MinHash signature banded for LSH.
 
-    Signature computed in an Arrow-batched pandas UDF over the pure kernel
-    (md5-based, deterministic across executors); banding turns near-dup
-    detection into an equi-join. rows_per_band = num_perm // bands.
+    Signature computed in one batch-level Python stage over the pure
+    kernel (md5-based, deterministic across executors); banding turns
+    near-dup detection into an equi-join. rows_per_band = num_perm // bands.
     """
-    import numpy as np
+    memo: dict = {}  # per-task shingle-hash cache, across batches
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict = {}  # executor-lifetime shingle-hash cache
-        for pdf in batches:
-            shingle_lists = [ts.word_shingles(t or "", k=shingle_k)
-                             for t in pdf["_text"]]
-            # whole batch vectorized: one (P, S_total) numpy transform,
-            # distinct shingles md5-hashed once (memoized across batches)
-            sigs = ts.minhash_signatures_batch(shingle_lists, num_perm,
-                                               _memo=memo)
-            # band bucket keys: one vectorized affine fold per batch
-            # (was a per-doc×band python md5 loop)
-            bh = ts.band_hashes(sigs, bands)
-            n = len(sigs)
-            yield pd.DataFrame({
-                "doc": np.repeat(np.asarray(pdf["_id"], dtype=np.int64),
-                                 bands),
-                "band": np.tile(np.arange(bands, dtype=np.int32), n),
-                "band_hash": bh.reshape(-1),
-            })
+    def minhash_bands(ids, texts):
+        shingle_lists = [ts.word_shingles(t or "", k=shingle_k)
+                         for t in texts]
+        # whole batch vectorized: one (P, S_total) numpy transform,
+        # distinct shingles md5-hashed once (memoized across batches)
+        sigs = ts.minhash_signatures_batch(shingle_lists, num_perm,
+                                           _memo=memo)
+        # band bucket keys: one vectorized affine fold per batch
+        # (was a per-doc×band python md5 loop)
+        bh = ts.band_hashes(sigs, bands)
+        return (np.repeat(ids, bands),
+                np.tile(np.arange(bands, dtype=np.int32), len(sigs)),
+                bh.reshape(-1))
 
-    src = spread_small_scan(
-        df.select(F.col(id_col).alias("_id"),
-                  F.col(text_col).alias("_text")))
-    return src.mapInPandas(run, schema=_SIG_SCHEMA)
+    return map_batches(spread_small_scan(df.select(id_col, text_col)),
+                       minhash_bands, _SIG_SCHEMA)
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                            num_perm: int = 32, bands: int = 8,
                            shingle_k: int = 3,
-                           bucket_cap: int | None = 512,
-                           persist_bands: bool = True) -> DataFrame:
+                           bucket_cap: int | None = 512) -> DataFrame:
     """Candidate near-dup pairs: docs sharing >=1 LSH band bucket.
     Shuffle keyed on (band, band_hash).
 
-    ``persist_bands`` is the unpersist path for the band-row cache
-    below (same contract as ``persist_postings``): callers processing
-    many corpora in one long-lived session should either pass False or
-    call ``spark.catalog.clearCache()`` between corpora — the cache is
-    keyed on the input plan, so each distinct corpus otherwise pins a
-    new entry for the session lifetime.
+    The band rows are cached (see below): callers processing many
+    corpora in one long-lived session should call
+    ``spark.catalog.clearCache()`` between corpora — the cache is keyed
+    on the input plan, so each distinct corpus otherwise pins a new
+    entry for the session lifetime.
 
     ``bucket_cap`` is the enforced skew bound: a (band, band_hash) bucket
     of n docs yields n² candidate rows — identical boilerplate pages form
@@ -216,18 +202,17 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
     # lazily cache the band rows (long+int+long per row — ~20 B): they
     # feed the hot-bucket agg, the anti-join probe side, AND both sides
     # of the self-join below. Without the cache the full-corpus
-    # signature pass (the expensive mapInPandas) appears FOUR times in
+    # signature pass (the expensive Python stage) appears FOUR times in
     # the physical plan with zero exchange reuse (pruned copies differ,
     # so ReuseExchange never fires) — measured at sf1.0: 14.9 s -> 8.4 s
-    # warm. Unlike ngram postings (persist_postings note above), these
+    # warm. Unlike ngram postings (the postings note above), these
     # rows are scalar columns, so cache serialization is cheap.
     # Measured at sf1.0: 14.9-19.7 s -> 5.8 s first call (and repeat
     # calls hit Spark's plan-keyed cache at 1.5 s). At corpus scale the
     # cached relation is ~20 B x bands per multi-KB document (<3% of
     # corpus bytes, MEMORY_AND_DISK spills) vs FOUR signature passes
     # over the full text — the same trade minhash_then_verify makes.
-    if persist_bands:
-        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
     if bucket_cap is not None:
         hot = (rows.groupBy("band", "band_hash")
                    .agg(F.count("*").alias("n_"))
@@ -330,22 +315,20 @@ def simhash_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
-                      max_hamming: int = 3,
-                      persist_hashes: bool = True) -> DataFrame:
+                      max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: 4x16-bit bands guarantee any pair with
     hamming<=3 shares a band (pigeonhole); exact hamming verify after the
     band join. Classic Manku/Google simhash dedup layout.
 
-    ``persist_hashes``: unpersist path for the simhash cache (same
-    contract as ``persist_bands`` on minhash_lsh_candidates — pass False
-    or clearCache between corpora in long-lived sessions)."""
+    The simhash rows are cached (same contract as the band rows of
+    minhash_lsh_candidates — call ``spark.catalog.clearCache()``
+    between corpora in long-lived sessions)."""
     sh = simhash_docs(df, id_col, text_col)
     # two longs per doc, but the Python stage above runs simhash64 over
     # every document's full text — and the self-join below otherwise
     # executes that pass TWICE (pruned copies, no ReuseExchange; same
     # recompute class as minhash_lsh_candidates, measured there 2.6x)
-    if persist_hashes:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     banded = sh.select(
         "doc", "simhash",
         F.explode(F.array(*[

@@ -13,11 +13,11 @@ with a bucket equi-join.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+from my_ocr_spark.session import map_batches, spread_small_scan
 
 
 def _dot(a, b):
@@ -50,8 +50,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     interpreted zip_with+aggregate expression tree per pair (HOFs are
     outside codegen): measured 1.9-2.0 s vs 1.05 s at sf1.0 for the
     20k x 10 pair sweep."""
-    from my_ocr_spark.session import spread_small_scan
-
     c = spread_small_scan(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cvec")))
@@ -60,30 +58,23 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     j = (c.crossJoin(F.broadcast(q))
          .filter(F.col("neighbor_id") != F.col("query_id")))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack([np.asarray(v, np.float64)
-                           for v in pdf["_cvec"]])
-            qm = np.stack([np.asarray(v, np.float64)
-                           for v in pdf["_qvec"]])
-            n, dim = cm.shape
-            dot = np.zeros(n)
-            cn = np.zeros(n)
-            qn = np.zeros(n)
-            for d in range(dim):
-                x = cm[:, d]
-                y = qm[:, d]
-                dot += x * y
-                cn += x * x
-                qn += y * y
-            cos = dot / (np.sqrt(cn) * np.sqrt(qn))
-            yield pd.DataFrame({"query_id": pdf["query_id"],
-                                "neighbor_id": pdf["neighbor_id"],
-                                "cos": cos})
+    def cosine_scores(neighbor_id, cvec, query_id, qvec):
+        cm = np.stack([np.asarray(v, np.float64) for v in cvec])
+        qm = np.stack([np.asarray(v, np.float64) for v in qvec])
+        n, dim = cm.shape
+        dot = np.zeros(n)
+        cn = np.zeros(n)
+        qn = np.zeros(n)
+        for d in range(dim):
+            x = cm[:, d]
+            y = qm[:, d]
+            dot += x * y
+            cn += x * x
+            qn += y * y
+        return query_id, neighbor_id, dot / (np.sqrt(cn) * np.sqrt(qn))
 
-    sc = j.mapInPandas(run, "query_id bigint, neighbor_id bigint, cos double")
+    sc = map_batches(j, cosine_scores,
+                     "query_id bigint, neighbor_id bigint, cos double")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
                                                F.asc("neighbor_id"))
     return (sc.withColumn("rank", F.row_number().over(w))
@@ -109,25 +100,21 @@ def lsh_buckets(df: DataFrame, id_col: str = "vec_id",
     """Random-hyperplane sign bucket per vector (vectorized numpy batch)."""
     planes = _hyperplanes(dim, n_planes)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf["_vec"]])
-            # explicit left-to-right fold over dims (vectorized over
-            # rows) instead of BLAS matmul: BLAS blocks/reorders the
-            # summation, so a dot product within rounding error of zero
-            # could bucket differently from any other evaluation order.
-            # This order is the one the DuckDB oracle reproduces —
-            # bucket assignment becomes a pure deterministic function.
-            dots = np.zeros((len(mat), n_planes))
-            for d in range(mat.shape[1]):
-                dots += mat[:, d:d + 1] * planes.T[d:d + 1, :]
-            buckets = ((dots > 0)
-                       .dot(1 << np.arange(n_planes)).astype(np.int32))
-            yield pd.DataFrame({"vid": pdf["_id"], "bucket": buckets})
+    def hyperplane_buckets(ids, vecs):
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        # explicit left-to-right fold over dims (vectorized over rows)
+        # instead of BLAS matmul: BLAS blocks/reorders the summation, so
+        # a dot product within rounding error of zero could bucket
+        # differently from any other evaluation order. This order is
+        # the one the DuckDB oracle reproduces — bucket assignment
+        # becomes a pure deterministic function.
+        dots = np.zeros((len(mat), n_planes))
+        for d in range(mat.shape[1]):
+            dots += mat[:, d:d + 1] * planes.T[d:d + 1, :]
+        return ids, (dots > 0).dot(1 << np.arange(n_planes))
 
-    src = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    return src.mapInPandas(run, schema=_BUCKET_SCHEMA)
+    return map_batches(df.select(id_col, vec_col), hyperplane_buckets,
+                       _BUCKET_SCHEMA)
 
 
 _PAIR_EDGE_SCHEMA = T.StructType([
@@ -223,20 +210,21 @@ def ivf_assign(df: DataFrame, centroids, id_col: str = "vec_id",
     never shuffled. Distances are exact integers on quantized vectors
     (see IVF_SCALE), so assignment is order-independent and
     cross-engine reproducible; ties go to the lowest cell (argmin)."""
-    import numpy as np
-
     cent = np.asarray(centroids, dtype=np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            q = quantize_vecs(np.stack([np.asarray(v, dtype=np.float64)
-                                        for v in pdf["_vec"]]))
-            d = ((q[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            cell = d.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame({"vid": pdf["_id"], "bucket": cell})
+    def nearest_cell(ids, vecs):
+        return ids, _cell_distances(vecs, cent).argmin(axis=1)
 
-    src = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    return src.mapInPandas(run, schema=_BUCKET_SCHEMA)
+    return map_batches(df.select(id_col, vec_col), nearest_cell,
+                       _BUCKET_SCHEMA)
+
+
+def _cell_distances(vecs, cent):
+    """Exact int64 squared-L2 distance of each quantized vector (an
+    object array of float arrays) to each centroid: (n, n_centroids)."""
+    q = quantize_vecs(np.stack([np.asarray(v, dtype=np.float64)
+                                for v in vecs]))
+    return ((q[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
 
 
 # Quantization scale for the IVF coarse quantizer: cell geometry lives in
@@ -248,8 +236,6 @@ IVF_SCALE = 256
 
 def quantize_vecs(mat):
     """floor(x*SCALE + 0.5) — same double ops as the SQL twin, exact."""
-    import numpy as np
-
     return np.floor(np.asarray(mat, dtype=np.float64) * IVF_SCALE
                     + 0.5).astype(np.int64)
 
@@ -272,8 +258,6 @@ def train_centroids_kmeans(df: DataFrame, n_centroids: int = 16,
     distances, floor-div means, empty cells keep their centroid), so the
     codebook is a pure function of the sample — reproducible in SQL —
     rather than depending on float summation order."""
-    import numpy as np
-
     rows = (df.select(F.col(id_col).alias("_id"),
                       F.col(vec_col).alias("_v"))
               .withColumn("_h", F.md5(F.col("_id").cast("string")))
@@ -303,8 +287,6 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, centroids,
     Approximate (recall dial = n_probe); at scale this is a bucket
     equi-join instead of a full scan per query. Cell choice uses the
     same exact-integer metric as assignment (ties → lower cell)."""
-    import numpy as np
-
     cent = np.asarray(centroids, dtype=np.int64)
 
     cb = ivf_assign(corpus, cent, id_col, vec_col)
@@ -312,23 +294,14 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, centroids,
                .select(F.col(id_col).alias("neighbor_id"),
                        F.col(vec_col).alias("_cvec"), "bucket"))
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            q = quantize_vecs(np.stack([np.asarray(v, dtype=np.float64)
-                                        for v in pdf["_vec"]]))
-            d = ((q[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            # stable sort: equal distances probe the lower cell first
-            order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            ids, cells = [], []
-            for i, vid in enumerate(pdf["_id"]):
-                for cell in order[i]:
-                    ids.append(vid)
-                    cells.append(int(cell))
-            yield pd.DataFrame({"vid": ids, "bucket": cells})
+    def probe_cells(ids, vecs):
+        # stable sort: equal distances probe the lower cell first
+        order = np.argsort(_cell_distances(vecs, cent), axis=1,
+                           kind="stable")[:, :n_probe]
+        return np.repeat(ids, order.shape[1]), order.reshape(-1)
 
-    qsrc = queries.select(F.col(id_col).alias("_id"),
-                          F.col(vec_col).alias("_vec"))
-    qb = qsrc.mapInPandas(probe, schema=_BUCKET_SCHEMA)
+    qb = map_batches(queries.select(id_col, vec_col), probe_cells,
+                     _BUCKET_SCHEMA)
     q = (queries.join(qb, queries[id_col] == qb.vid)
                 .select(F.col(id_col).alias("query_id"),
                         F.col(vec_col).alias("_qvec"), "bucket"))

@@ -6,15 +6,13 @@ engines compute from identical inputs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from my_ocr_spark.plans.registry import query, t
-from my_ocr_spark.session import map_rows, spread_small_scan
+from my_ocr_spark.session import map_batches, map_rows, spread_small_scan
 from my_ocr_spark.plans.relational import _GT_SQL, _PRED_SQL, _gt_pred
 
 
@@ -423,31 +421,24 @@ def poly_iou_match_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.x0").alias("px0"), F.col("p.y0").alias("py0"),
         F.col("p.x1").alias("px1"), F.col("p.y1").alias("py1"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def quad_iou(gt_id, pred_id, gx0, gy0, gx1, gy1, px0, py0, px1, py1):
         # batch Sutherland–Hodgman (kernel/polyclip.quad_intersection_
         # areas): the old per-row itertuples + scalar clip was the
         # per-row-Python anti-pattern and dominated the query at
         # realistic pair densities (differential-tested equal)
-        for pdf in batches:
-            g = np.stack([pdf[c].to_numpy() for c in
-                          ("gx0", "gy0", "gx1", "gy1")], axis=1)
-            p = np.stack([pdf[c].to_numpy() for c in
-                          ("px0", "py0", "px1", "py1")], axis=1)
-            quads_g = np.stack([g[:, [0, 1]], g[:, [2, 1]],
-                                g[:, [2, 3]], g[:, [0, 3]]], axis=1)
-            quads_p = np.stack([p[:, [0, 1]], p[:, [2, 1]],
-                                p[:, [2, 3]], p[:, [0, 3]]], axis=1)
-            areas = pc.quad_intersection_areas(quads_g, quads_p)
-            inter = np.floor(areas + 0.5).astype(np.int64)
-            sum_areas = ((g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
-                         + (p[:, 2] - p[:, 0]) * (p[:, 3] - p[:, 1]))
-            yield pd.DataFrame({
-                "gt_id": pdf["gt_id"], "pred_id": pdf["pred_id"],
-                "inter": pd.Series(inter, dtype="int64"),
-                "iou": pd.Series(inter / (sum_areas - inter),
-                                 dtype="float64")})
+        g = np.stack([gx0, gy0, gx1, gy1], axis=1)
+        p = np.stack([px0, py0, px1, py1], axis=1)
+        quads_g = np.stack([g[:, [0, 1]], g[:, [2, 1]],
+                            g[:, [2, 3]], g[:, [0, 3]]], axis=1)
+        quads_p = np.stack([p[:, [0, 1]], p[:, [2, 1]],
+                            p[:, [2, 3]], p[:, [0, 3]]], axis=1)
+        areas = pc.quad_intersection_areas(quads_g, quads_p)
+        inter = np.floor(areas + 0.5).astype(np.int64)
+        sum_areas = ((g[:, 2] - g[:, 0]) * (g[:, 3] - g[:, 1])
+                     + (p[:, 2] - p[:, 0]) * (p[:, 3] - p[:, 1]))
+        return gt_id, pred_id, inter, inter / (sum_areas - inter)
 
-    out = pairs.mapInPandas(run, schema=_IOU2D_OUT)
+    out = map_batches(pairs, quad_iou, _IOU2D_OUT)
     return out.filter(F.col("iou") > 0.3)
 
 
@@ -495,39 +486,30 @@ def polygon_shrink_inset(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("inset_area", T.DoubleType(), False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the kernel runs once per DISTINCT (w, h) — 50x40 classes at
-        # most — and the results broadcast back over the batch:
-        # dictionary-encoding repeated inputs before an expensive
-        # transform (the old per-row loop re-ran the full offset kernel
-        # 150k times at sf0.1 for 120 distinct inputs — 44 s of pure
-        # recomputation)
-        memo: dict[tuple[float, float], tuple[float, float]] = {}
+    # the kernel runs once per DISTINCT (w, h) — 50x40 classes at most
+    # — and the results broadcast back over the batch: dictionary-
+    # encoding repeated inputs before an expensive transform (the old
+    # per-row loop re-ran the full offset kernel 150k times at sf0.1
+    # for 120 distinct inputs — 44 s of pure recomputation)
+    memo: dict[tuple[float, float], tuple[float, float]] = {}
 
-        def solve(w: float, h: float) -> tuple[float, float]:
-            key = (w, h)
-            if key not in memo:
-                rect = [0.0, 0.0, w, 0.0, w, h, 0.0, h]
-                area = pc.polygon_area(rect)
-                peri = pc.polygon_perimeter(rect)
-                d = area * (1.0 - 0.4 * 0.4) / (peri + 0.001)
-                inset = pc.shrink_polygon(rect, 0.4)
-                memo[key] = (
-                    d, pc.polygon_area(inset) if len(inset) else 0.0)
-            return memo[key]
+    def solve(w: float, h: float) -> tuple[float, float]:
+        if (w, h) not in memo:
+            rect = [0.0, 0.0, w, 0.0, w, h, 0.0, h]
+            area = pc.polygon_area(rect)
+            peri = pc.polygon_perimeter(rect)
+            d = area * (1.0 - 0.4 * 0.4) / (peri + 0.001)
+            inset = pc.shrink_polygon(rect, 0.4)
+            memo[w, h] = (d, pc.polygon_area(inset) if len(inset) else 0.0)
+        return memo[w, h]
 
-        for pdf in batches:
-            key = pd.Series(list(zip(pdf["w"], pdf["h"])),
-                            index=pdf.index)
-            table = {t_: solve(*t_) for t_ in set(key)}
-            ds = key.map(lambda t_: table[t_][0])
-            areas = key.map(lambda t_: table[t_][1])
-            yield pd.DataFrame({
-                "poly_id": pdf["poly_id"],
-                "inset_d": pd.Series(ds, dtype="float64"),
-                "inset_area": pd.Series(areas, dtype="float64")})
+    def shrink_inset(poly_id, w, h):
+        wh, cls = np.unique(np.stack([w, h], axis=1), axis=0,
+                            return_inverse=True)
+        d, area = np.array([solve(*k) for k in wh.tolist()]).T
+        return poly_id, d[cls], area[cls]
 
-    out = src.mapInPandas(run, schema=out_schema)
+    out = map_batches(src, shrink_inset, out_schema)
     return out.select("poly_id", "inset_d",
                       F.round("inset_area", 4).alias("inset_area"))
 
@@ -846,15 +828,10 @@ def point2line_distance_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double").alias("x2"),
         ((F.col("l_orderkey") * 7) % 100).cast("double").alias("y2"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            d = point2line_dist(
-                pdf["px"].to_numpy(), pdf["py"].to_numpy(),
-                pdf["x1"].to_numpy(), pdf["y1"].to_numpy(),
-                pdf["x2"].to_numpy(), pdf["y2"].to_numpy())
-            yield pd.DataFrame({"pid": pdf["pid"], "dist": d})
+    def point2line(pid, px, py, x1, y1, x2, y2):
+        return pid, point2line_dist(px, py, x1, y1, x2, y2)
 
-    return pts.mapInPandas(run, schema=_P2L_OUT)
+    return map_batches(pts, point2line, _P2L_OUT)
 
 
 _MAR_OUT = T.StructType([
@@ -888,32 +865,27 @@ def min_area_rect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = t(spark, sf_dir, "orders").select("o_orderkey")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    rots = np.array([(1.0, 0.0), (0.6, 0.8), (0.28, 0.96), (0.8, 0.6)])
+
+    def min_area_rect(k):
         # batch calipers (min_area_rect_sizes_convex): the quads are
         # convex by construction, and the scalar hull+calipers loop
         # was the per-row-Python hot path of this query at sf0.1
-        rots = np.array([(1.0, 0.0), (0.6, 0.8), (0.28, 0.96),
-                         (0.8, 0.6)])
-        for pdf in batches:
-            k = pdf["o_orderkey"].to_numpy(dtype=np.int64)
-            a = (20 + k % 30).astype(np.float64)
-            b = (5 + k % 17).astype(np.float64)
-            c = rots[k % 4, 0]
-            s = rots[k % 4, 1]
-            tx = (k % 50).astype(np.float64)
-            ty = (k % 70).astype(np.float64)
-            quads = np.stack([
-                np.stack([tx, ty], 1),
-                np.stack([tx + a * c, ty + a * s], 1),
-                np.stack([tx + a * c - b * s, ty + a * s + b * c], 1),
-                np.stack([tx - b * s, ty + b * c], 1)], axis=1)
-            short, long_ = min_area_rect_sizes_convex(quads)
-            yield pd.DataFrame({
-                "poly_id": k,
-                "short_side": np.round(short, 4),
-                "long_side": np.round(long_, 4)})
+        a = (20 + k % 30).astype(np.float64)
+        b = (5 + k % 17).astype(np.float64)
+        c = rots[k % 4, 0]
+        s = rots[k % 4, 1]
+        tx = (k % 50).astype(np.float64)
+        ty = (k % 70).astype(np.float64)
+        quads = np.stack([
+            np.stack([tx, ty], 1),
+            np.stack([tx + a * c, ty + a * s], 1),
+            np.stack([tx + a * c - b * s, ty + a * s + b * c], 1),
+            np.stack([tx - b * s, ty + b * c], 1)], axis=1)
+        short, long_ = min_area_rect_sizes_convex(quads)
+        return k, np.round(short, 4), np.round(long_, 4)
 
-    return spread_small_scan(o).mapInPandas(run, schema=_MAR_OUT)
+    return map_batches(spread_small_scan(o), min_area_rect, _MAR_OUT)
 
 
 _WARP_OUT = T.StructType([
@@ -958,39 +930,26 @@ def warp_crop_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = t(spark, sf_dir, "orders").select("o_orderkey")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ii, jj = np.mgrid[0:8, 0:10]
-        # every output is a pure function of (k % 17, k % 4, k % 3) —
-        # 204 classes — so the DLT solve + bilinear sample runs once
-        # per class, not once per row (the old per-row loop spent 31 s
-        # at sf0.1 recomputing 204 distinct answers 150k times)
-        memo: dict[tuple[int, int, int], tuple[int, float, float]] = {}
+    ii, jj = np.mgrid[0:8, 0:10]
+    # every output is a pure function of (k % 17, k % 4, k % 3); 17, 4
+    # and 3 are pairwise coprime, so k % 204 indexes those 204 classes
+    # (CRT) and the DLT solve + bilinear sample runs once per class, not
+    # once per row (the old per-row loop spent 31 s at sf0.1
+    # recomputing 204 distinct answers 150k times)
+    memo: dict[int, tuple[int, float, float]] = {}
 
-        def solve(k: int) -> tuple[int, float, float]:
-            key = (k % 17, k % 4, k % 3)
-            if key not in memo:
-                img = (key[0] + 3 * ii + 7 * jj) % 17
-                x0, y0 = key[1], key[2]
-                quad = [(x0, y0), (x0 + 4, y0),
-                        (x0 + 4, y0 + 3), (x0, y0 + 3)]
-                c = crop_quad_pixels(img.astype(float), quad, 4, 3)
-                memo[key] = (int(round(c.sum())),
-                             round(float(c[0, 0]), 6),
-                             round(float(c[2, 3]), 6))
-            return memo[key]
+    def warp_crop(k):
+        cls = k % 204
+        if cls not in memo:
+            img = (cls % 17 + 3 * ii + 7 * jj) % 17
+            x0, y0 = cls % 4, cls % 3
+            quad = [(x0, y0), (x0 + 4, y0), (x0 + 4, y0 + 3), (x0, y0 + 3)]
+            c = crop_quad_pixels(img.astype(float), quad, 4, 3)
+            memo[cls] = (int(round(c.sum())), round(float(c[0, 0]), 6),
+                         round(float(c[2, 3]), 6))
+        yield (k, *memo[cls])
 
-        for pdf in batches:
-            # 17, 4, 3 are pairwise coprime, so k % 204 indexes the
-            # class (CRT); one kernel run per class, C-speed map back
-            cls = pdf["o_orderkey"] % 204
-            table = {c: solve(int(c)) for c in cls.unique()}
-            yield pd.DataFrame({
-                "doc_key": pdf["o_orderkey"],
-                "crop_sum": cls.map(lambda c: table[c][0]),
-                "tl_px": cls.map(lambda c: table[c][1]),
-                "br_px": cls.map(lambda c: table[c][2])})
-
-    return spread_small_scan(o).mapInPandas(run, schema=_WARP_OUT)
+    return map_rows(o, warp_crop, _WARP_OUT)
 
 
 _SV_OUT = T.StructType([

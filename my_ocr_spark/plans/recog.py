@@ -3,15 +3,13 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from my_ocr_spark.kernel.codec import DICT36, char_true_positives
 from my_ocr_spark.plans.registry import query, t
 from my_ocr_spark.plans.relational import _GT_SQL, _PRED_SQL, _gt_pred
+from my_ocr_spark.session import map_rows
 
 # CASE expression shared verbatim by both engines (36-char dict + UKN=36,
 # convertors/base.py:20-46)
@@ -63,10 +61,9 @@ def char_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CHARPR_OUT = T.StructType([
-    T.StructField("n_pairs", T.LongType(), False),
-    T.StructField("sum_tp", T.LongType(), False),
-    T.StructField("sum_pred_len", T.LongType(), False),
-    T.StructField("sum_gt_len", T.LongType(), False),
+    T.StructField("tp", T.LongType(), False),
+    T.StructField("pred_len", T.LongType(), False),
+    T.StructField("gt_len", T.LongType(), False),
 ])
 
 # three pred families: vowel-stripped (many short blocks), reversed
@@ -174,23 +171,15 @@ def char_precision_recall_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
              .otherwise(F.lower(F.substring("text", 3, 24))))
     pairs = d.select(pred.alias("pred"), gt.alias("gt"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n, tp, pl, gl = 0, 0, 0, 0
-        for pdf in batches:
-            for p_, g_ in zip(pdf["pred"], pdf["gt"]):
-                p_, g_ = p_ or "", g_ or ""
-                tp += char_true_positives(p_, g_)
-                pl += len(p_)
-                gl += len(g_)
-                n += 1
-        yield pd.DataFrame({"n_pairs": [n], "sum_tp": [tp],
-                            "sum_pred_len": [pl], "sum_gt_len": [gl]})
+    def char_tp(pred, gt):
+        pred, gt = pred or "", gt or ""
+        yield char_true_positives(pred, gt), len(pred), len(gt)
 
-    partial = pairs.mapInPandas(run, schema=_CHARPR_OUT)
-    return (partial.agg(F.sum("n_pairs").alias("n_pairs"),
-                        F.sum("sum_tp").alias("sum_tp"),
-                        F.sum("sum_pred_len").alias("sum_pred_len"),
-                        F.sum("sum_gt_len").alias("sum_gt_len"))
+    per = map_rows(pairs, char_tp, _CHARPR_OUT)
+    return (per.agg(F.count("*").alias("n_pairs"),
+                    F.sum("tp").alias("sum_tp"),
+                    F.sum("pred_len").alias("sum_pred_len"),
+                    F.sum("gt_len").alias("sum_gt_len"))
             .select("n_pairs", "sum_tp", "sum_pred_len", "sum_gt_len",
                     (F.col("sum_tp").cast("double")
                      / F.col("sum_pred_len").cast("double"))

@@ -1,10 +1,11 @@
-"""map_rows: the one per-row Python stage (1:1 maps and explodes over
-mapInArrow, output columns typed from the Spark schema)."""
+"""map_rows and map_batches: the one per-row and the one batch-level
+Python stage (each one mapInArrow, output columns typed from the Spark
+schema)."""
 
 import pytest
 from pyspark.sql import types as T
 
-from my_ocr_spark.session import map_rows
+from my_ocr_spark.session import map_batches, map_rows
 
 _WORDS_DDL = "id bigint, word string, raw binary, lens array<bigint>"
 _WORDS_SCHEMA = T.StructType([
@@ -100,3 +101,92 @@ def test_wrong_arity_fails_loudly(spark):
 
     with pytest.raises(Exception, match="Tuple size"):
         map_rows(spark.range(3), short, "a bigint, b bigint").collect()
+
+
+# --- map_batches: the one batch-level Python stage ---------------------
+
+_STATS_DDL = "id10 bigint, n int, total double"
+_STATS_SCHEMA = T.StructType([
+    T.StructField("id10", T.LongType()),
+    T.StructField("n", T.IntegerType()),
+    T.StructField("total", T.DoubleType()),
+])
+
+
+def _vecs(spark):
+    rows = [(1, "ab", [1.0, 2.5]), (2, "", [0.5]), (3, "xyz", []),
+            (4, None, [4.0, 4.0, 4.0])]
+    return spark.createDataFrame(rows, "id bigint, word string, "
+                                       "vec array<double>")
+
+
+def _batch_stats():
+    import numpy as np
+
+    def batch_stats(ids, words, vecs):
+        # one call per batch, columns as numpy arrays: strings and
+        # arrays arrive as object arrays
+        assert ids.dtype == np.int64, ids.dtype
+        assert words.dtype == object and vecs.dtype == object
+        n = np.array([len(w or "") for w in words])
+        total = np.array([float(np.sum(v)) for v in vecs])
+        return ids * 10, n, total
+    return batch_stats
+
+
+def test_map_batches_types_columns_from_ddl(spark):
+    out = map_batches(_vecs(spark), _batch_stats(), _STATS_DDL)
+    assert out.schema == _STATS_SCHEMA
+    assert sorted(map(tuple, out.collect())) == [
+        (10, 2, 3.5), (20, 0, 0.5), (30, 3, 0.0), (40, 0, 12.0)]
+
+
+def test_map_batches_ddl_and_struct_schema_agree(spark):
+    a = map_batches(_vecs(spark), _batch_stats(), _STATS_DDL)
+    b = map_batches(_vecs(spark), _batch_stats(), _STATS_SCHEMA)
+    assert a.schema == b.schema
+    assert sorted(a.collect()) == sorted(b.collect())
+
+
+def test_map_batches_empty_input(spark):
+    df = spark.createDataFrame([], "id bigint, word string, "
+                                   "vec array<double>")
+    out = map_batches(df, _batch_stats(), _STATS_DDL)
+    assert out.schema == _STATS_SCHEMA
+    assert out.collect() == []
+
+
+def test_map_batches_keeps_input_width_and_names_stage(spark):
+    """Unlike map_rows, map_batches runs over its input as partitioned:
+    a caller with a heavy kernel spreads a narrow scan itself."""
+    from my_ocr_spark.session import spread_small_scan
+
+    def halve(ids):
+        return (ids // 2,)
+
+    df = spark.range(0, 40, 1, 1)
+    out = map_batches(df, halve, "h bigint")
+    plan = _plan(out)
+    assert "Exchange" not in plan, plan
+    assert "MapInArrow halve(" in plan, plan
+    assert sorted(r.h for r in out.collect()) == sorted(
+        i // 2 for i in range(40))
+    width = spark.sparkContext.defaultParallelism
+    spread = _plan(map_batches(spread_small_scan(df), halve, "h bigint"))
+    assert f"Exchange RoundRobinPartitioning({width})" in spread, spread
+
+
+def test_map_batches_wrong_columns_fail_loudly(spark):
+    def one_column(ids):
+        return (ids,)
+
+    with pytest.raises(Exception, match="returned 1 columns"):
+        map_batches(spark.range(3), one_column,
+                    "a bigint, b bigint").collect()
+
+    def ragged(ids):
+        return ids, ids[:1]
+
+    # 40 rows over at most 4 partitions: every batch holds several
+    with pytest.raises(Exception, match="same length"):
+        map_batches(spark.range(40), ragged, "a bigint, b bigint").collect()

@@ -28,6 +28,37 @@ def test_char_metrics_exact(spark):
     assert r["mean_char_recall"] == 0.8
 
 
+def test_char_metrics_empty_input(spark):
+    """No pairs: n_pairs 0 and null means, as ocr_text_metrics gives —
+    not a division by zero."""
+    pairs = (spark.createDataFrame([("a", "b"), ("c", "d")], ["pred", "gt"])
+             .repartition(2).filter("pred = 'zzz'"))
+    r = metrics.char_metrics(pairs).collect()[0]
+    assert r["n_pairs"] == 0
+    assert r["mean_char_precision"] is None
+    assert r["mean_char_recall"] is None
+
+
+def test_char_metrics_mean_over_partitions(spark):
+    """Three pairs over two partitions: the means equal a driver-side
+    mean of difflib's matched-character ratios."""
+    from difflib import SequenceMatcher
+
+    rows = [("helo", "hello"), ("world", "word"), ("abc", "xbz")]
+    pairs = spark.createDataFrame(rows, ["pred", "gt"]).repartition(2)
+    assert pairs.rdd.getNumPartitions() == 2
+    ps, rs = [], []
+    for p, g in rows:
+        tp = sum(b.size for b in SequenceMatcher(
+            None, p, g, autojunk=False).get_matching_blocks())
+        ps.append(tp / len(p))
+        rs.append(tp / len(g))
+    r = metrics.char_metrics(pairs).collect()[0]
+    assert r["n_pairs"] == 3
+    assert abs(r["mean_char_precision"] - sum(ps) / 3) < 1e-12
+    assert abs(r["mean_char_recall"] - sum(rs) / 3) < 1e-12
+
+
 def test_detection_hmean_perfect_match(spark):
     gt = spark.createDataFrame([(1, 100, 0.0, 10.0), (1, 101, 20.0, 30.0)],
                                ["img", "gt_id", "s", "e"])

@@ -29,8 +29,9 @@ def _n_exchanges(plan: str) -> int:
 
 
 def _n_python_maps(plan: str) -> int:
-    """Count per-batch Python map nodes of either kind (map_rows stages
-    plan as MapInArrow, the batch-vectorized stages as MapInPandas)."""
+    """Count per-batch Python map nodes of either kind (map_rows and
+    map_batches stages plan as MapInArrow, pdf_reading_order's carry as
+    MapInPandas)."""
     return sum(n in ("MapInPandas", "MapInArrow")
                for n in _node_names(plan))
 
@@ -162,8 +163,8 @@ def test_session_has_aqe_enabled(spark):
 def test_ngram_jaccard_postings_consumers(spark, sf_dir):
     """The postings-index rewrite's contract: at most 3 shingle-gen
     occurrences (pairs + the two sizes joins; the self-join form had 8),
-    and the persist_postings flag collapses them to one cached
-    materialization for corpus-scale runs."""
+    and the postings cache collapses them to one cached materialization
+    for corpus-scale runs."""
     from my_ocr_spark.operators.dedup import ngram_jaccard_pairs
     from my_ocr_spark.plans.registry import QUERIES, t
     import my_ocr_spark.plans.textpipe  # noqa: F401
@@ -171,7 +172,7 @@ def test_ngram_jaccard_postings_consumers(spark, sf_dir):
     assert _n_python_maps(plan) <= 3, plan
     docs = t(spark, sf_dir, "documents")
     cached = ngram_jaccard_pairs(docs, "doc_id", "text", n=4,
-                                 threshold=0.2, persist_postings=True)
+                                 threshold=0.2)
     cplan = _physical_plan(cached)
     assert "InMemoryRelation" in cplan or "TableCacheQueryStage" in cplan \
         or "InMemoryTableScan" in cplan, cplan
@@ -362,3 +363,66 @@ def test_rebuilt_plans_run_no_jobs(spark, sf_dir, count_jobs):
         query(spark, sf_dir)
         _, jobs = count_jobs(lambda: query(spark, sf_dir))
         assert jobs == 0, query.__name__
+
+
+# Registry queries whose Python stage is built by map_batches or map_rows
+# where a hand-rolled mapInPandas loop used to be, each with the name of
+# its stage's fn. Found by scanning every registry query's plan (and the
+# plans its build runs) for these MapInArrow names.
+_CONVERTED_STAGES = {
+    "char_precision_recall_agg": ["char_tp"],
+    "embedding_ann_ivf": ["nearest_cell", "probe_cells"],
+    "embedding_ann_lsh": ["hyperplane_buckets"],
+    "embedding_cosine_topk": ["cosine_scores"],
+    "min_area_rect_size": ["min_area_rect"],
+    "minhash_lsh_candidates": ["minhash_bands"],
+    "minhash_then_verify": ["minhash_bands"],
+    "point2line_distance_field": ["point2line"],
+    "poly_iou_match_2d": ["quad_iou"],
+    "polygon_shrink_inset": ["shrink_inset"],
+    "semantic_dedup_keep": ["nearest_cell"],
+    "warp_crop_checksum": ["warp_crop"],
+}
+
+
+def _built_plans(spark, build) -> str:
+    """The executed plan of ``build()``'s DataFrame, plus the plans of
+    the SQL executions ``build`` itself ran: semantic_dedup_keep runs
+    its cell assignment inside an eager localCheckpoint, so that stage
+    never reaches the returned plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id() -> int:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() \
+            if n else -1
+
+    first = last_id() + 1
+    plans = [_physical_plan(build())]
+    for i in range(first, last_id() + 1):
+        e = store.execution(i)
+        if e.isDefined():
+            plans.append(e.get().physicalPlanDescription())
+    return "\n".join(plans)
+
+
+def test_python_stages_plan_as_named_map_in_arrow(spark, sf_dir):
+    """Every converted stage plans as a MapInArrow named after its fn,
+    and no MapInPandas is left in those queries."""
+    import __spark_entry__ as E
+
+    queries = E.queries()
+    key = "spark.sql.ui.explainMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "simple")  # the executed plan's own format
+    try:
+        for name, fns in _CONVERTED_STAGES.items():
+            plan = _built_plans(spark, lambda: queries[name](spark, sf_dir))
+            assert "MapInPandas" not in _node_names(plan), (name, plan)
+            for fn in fns:
+                assert f"MapInArrow {fn}(" in plan, (name, fn, plan)
+    finally:
+        spark.conf.set(key, old)
+
