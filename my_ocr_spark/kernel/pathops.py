@@ -13,9 +13,9 @@ Clean-room reimplementations of the reference semantics:
   all points. Ties between extending the head vs the tail go to the
   head (the reference's ``key0 <= key1`` rule).
 
-Both are per-document sequential algorithms — in Spark they run inside
-``applyInPandas`` groups (bounded per-doc work, the max_candidates skew
-cap applies upstream).
+Both are per-document sequential algorithms — in Spark each runs once
+per image inside a ``session.map_groups`` stage (bounded per-doc work,
+the max_candidates skew cap applies upstream).
 """
 
 from __future__ import annotations

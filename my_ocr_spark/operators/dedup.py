@@ -285,9 +285,12 @@ def minhash_then_verify(df: DataFrame, id_col: str, text_col: str,
                 .distinct())
     # hash sets only for docs that appear in a candidate pair — in the
     # normal LSH regime candidates << corpus, so the shingle+md5 pass
-    # here is tiny (the old version hashed every corpus doc, twice)
-    docs = df.join(F.broadcast(cand_ids),
-                   df[id_col] == F.col("_cid"), "left_semi")
+    # here is tiny (the old version hashed every corpus doc, twice).
+    # Spread the scan before the semi-join: spread_small_scan leaves a
+    # plan holding the broadcast as it is
+    src = spread_small_scan(df.select(id_col, text_col))
+    docs = src.join(F.broadcast(cand_ids),
+                    src[id_col] == F.col("_cid"), "left_semi")
     hs = shingle_hash_sets(docs, id_col, text_col, shingle_k)
     h1 = hs.select(F.col("doc").alias("doc1"), F.col("hs").alias("_hs1"))
     h2 = hs.select(F.col("doc").alias("doc2"), F.col("hs").alias("_hs2"))

@@ -5,13 +5,13 @@ per-image KNN graphs over text-component features (sorted Euclidean
 distance matrix → k-at-hop neighborhoods). Graphs never cross documents,
 so the Spark shape is a grouped operator, not a global join: points are
 shuffled once on the group key and each group's all-pairs distance matrix
-lives inside one Arrow batch.
+is one numpy array.
 
 Scale notes:
 * groups are tiny (components per image), so launching one Python task
-  per group would drown in per-group overhead — groups are BUCKETED into
-  ``n_buckets`` applyInPandas tasks and iterated with pandas groupby
-  inside (measured 4x in round 1 on 15k tiny groups).
+  per group would drown in per-group overhead — ``session.map_groups``
+  buckets them and splits each bucket into its groups in Arrow
+  (measured 4x in round 1 on 15k tiny groups).
 * integer coordinates → integer squared distances → deterministic
   (dist2, neighbor_id) ordering, no float ties.
 """
@@ -19,8 +19,9 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
+
+from my_ocr_spark.session import map_groups
 
 KNN_SCHEMA = T.StructType([
     T.StructField("img", T.LongType(), False),
@@ -31,44 +32,24 @@ KNN_SCHEMA = T.StructType([
 ])
 
 
-def knn_per_group(points: DataFrame, k: int = 4,
-                  n_buckets: int | None = None) -> DataFrame:
+def knn_per_group(points: DataFrame, k: int = 4) -> DataFrame:
     """KNN within each ``img`` group of a (img, pid, x, y) DataFrame →
     (img, src_id, neighbor_id, dist2, rnk) with rnk in 1..k ordered by
-    (squared distance, neighbor id) — the local_graph.py k-at-hop-1 set.
+    (squared distance, neighbor id) — the local_graph.py k-at-hop-1 set."""
+    def local_knn(img, ids, x, y):
+        n = len(ids)
+        m = min(k, n - 1)
+        xy = np.stack([x, y], axis=1).astype(np.int64)
+        d = xy[:, None, :] - xy[None, :, :]
+        dist2 = (d * d).sum(axis=2)  # (n, n) exact int64
+        # ids arrive ascending, so a stable sort of each row orders by
+        # (dist2, neighbor id); dropping self leaves n - 1 per row
+        order = np.argsort(dist2, axis=1, kind="stable")
+        order = order[order != np.arange(n)[:, None]].reshape(n, n - 1)
+        order = order[:, :m]
+        return (np.repeat(img, m), np.repeat(ids, m), ids[order].ravel(),
+                np.take_along_axis(dist2, order, axis=1).ravel(),
+                np.tile(np.arange(1, m + 1), n))
 
-    ``n_buckets`` defaults to session-parallelism-scaled (see
-    session.bucket_count) — a fixed constant would cap matcher
-    concurrency on a large cluster."""
-    if n_buckets is None:
-        from my_ocr_spark.session import bucket_count
-        n_buckets = bucket_count(points.sparkSession)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [] for c in ("img", "src_id", "neighbor_id", "dist2",
-                               "rnk")}
-        for img, g in pdf.groupby("img", sort=False):
-            ids = g["pid"].to_numpy(dtype=np.int64)
-            xy = g[["x", "y"]].to_numpy(dtype=np.int64)
-            n = len(ids)
-            if n < 2:
-                continue
-            d = xy[:, None, :] - xy[None, :, :]
-            dist2 = (d * d).sum(axis=2)  # (n, n) exact int64
-            for i in range(n):
-                # order by (dist2, neighbor_id), excluding self
-                order = np.lexsort((ids, dist2[i]))
-                order = order[order != i][:k]
-                m = len(order)
-                out["img"].extend([img] * m)
-                out["src_id"].extend([ids[i]] * m)
-                out["neighbor_id"].extend(ids[order].tolist())
-                out["dist2"].extend(dist2[i, order].tolist())
-                out["rnk"].extend(range(1, m + 1))
-        return pd.DataFrame(out, dtype=np.int64) if out["img"] else \
-            pd.DataFrame({c: pd.Series(dtype=np.int64) for c in out})
-
-    bucketed = points.withColumn(
-        "_bucket", F.pmod(F.col("img"), F.lit(n_buckets)))
-    return (bucketed.groupBy("_bucket")
-            .applyInPandas(lambda pdf: run(pdf), schema=KNN_SCHEMA))
+    return map_groups(points.select("img", "pid", "x", "y"), "img",
+                      local_knn, KNN_SCHEMA, order=["pid"])

@@ -10,8 +10,9 @@ stays deterministic.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
+
+from my_ocr_spark.session import map_groups
 
 _PACK_SCHEMA = T.StructType([
     T.StructField("source", T.StringType(), True),
@@ -28,12 +29,9 @@ def greedy_pack(d: DataFrame, capacity: int = 512) -> DataFrame:
     pack while fill + n_tok <= capacity, else open a new pack (1-based
     ids; oversize docs get solo packs).
 
-    Shards are small by construction (~hundreds of docs), so the
-    grouped map runs BUCKETED: shards hash into
-    defaultParallelism-scaled buckets and each Python call packs every
-    complete shard in its bucket via a pandas groupby — the
-    tiny-group applyInPandas launcher cost (CLAUDE.md invariant 5)
-    stays amortized while shard-level determinism is untouched.
+    Shards are small by construction (~hundreds of docs), so the scan
+    is one ``session.map_groups`` stage keyed on (source, shard): shards
+    share buckets, and a NULL source is a shard like any other.
 
     The per-doc capacity loop stays plain Python BY MEASUREMENT (round-6
     note, per the vectorize-or-document task): isolated at sf0.1 it runs
@@ -42,35 +40,18 @@ def greedy_pack(d: DataFrame, capacity: int = 512) -> DataFrame:
     capacity-reset cumsum would complicate the reset semantics for a
     sub-0.2% stage; shards are the parallel unit, so per-shard scan cost
     is bounded (~hundreds of docs) at any corpus scale."""
-    spark = d.sparkSession
-    from my_ocr_spark.session import bucket_count
+    def pack_shard(source, shard, doc_id, n_tok):
+        pack_ids = []
+        pack_id, fill = 0, capacity + 1
+        for n in n_tok.tolist():
+            if fill + n <= capacity:
+                fill += n
+            else:
+                pack_id += 1
+                fill = n
+            pack_ids.append(pack_id)
+        return source, shard, doc_id, n_tok, pack_ids
 
-    b = bucket_count(spark)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        # dropna=False: the schema declares source nullable, and a
-        # NULL-source shard must still be packed, not silently dropped.
-        for _, g in pdf.groupby(["source", "shard"], sort=True,
-                                dropna=False):
-            g = g.sort_values("doc_id").reset_index(drop=True)
-            pack_ids = []
-            pack_id, fill = 0, capacity + 1
-            for n in g["n_tok"]:
-                if fill + n <= capacity:
-                    fill += n
-                else:
-                    pack_id += 1
-                    fill = n
-                pack_ids.append(pack_id)
-            g["pack_id"] = pd.Series(pack_ids, dtype="int64")
-            outs.append(g[["source", "shard", "doc_id", "n_tok",
-                           "pack_id"]])
-        return (pd.concat(outs) if outs
-                else pd.DataFrame(columns=[f.name
-                                           for f in _PACK_SCHEMA]))
-
-    bucketed = d.withColumn(
-        "_b", F.pmod(F.xxhash64("source", "shard"), F.lit(b)))
-    return (bucketed.groupBy("_b")
-            .applyInPandas(lambda pdf: run(pdf), schema=_PACK_SCHEMA))
+    return map_groups(d.select("source", "shard", "doc_id", "n_tok"),
+                      ["source", "shard"], pack_shard, _PACK_SCHEMA,
+                      order=["doc_id"])

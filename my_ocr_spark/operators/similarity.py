@@ -14,10 +14,9 @@ with a bucket equi-join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from my_ocr_spark.session import map_batches, spread_small_scan
+from my_ocr_spark.session import map_batches, map_groups, spread_small_scan
 
 
 def _dot(a, b):
@@ -147,16 +146,11 @@ def cell_cosine_edges(nv: DataFrame, threshold: float,
     bounded by the codebook size); ids sorted per cell so emitted
     (src, dst) always has src < dst. Cells of < 2 vectors emit
     nothing."""
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
+    def cell_pairs(cell, ids, vecs, nrm):
         n = len(ids)
         if n < 2:
-            return pd.DataFrame({"src": pd.Series([], dtype="int64"),
-                                 "dst": pd.Series([], dtype="int64")})
-        mat = np.stack([np.asarray(v, dtype=np.float64)
-                        for v in pdf[vec_col]])
-        nrm = pdf[norm_col].to_numpy()
+            return (), ()
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         # Row-blocked upper triangle, d-major accumulation. For every
         # pair the additions are the SAME IEEE ops in the SAME order as
         # the _dot fold (multiply into a preallocated buffer, add into
@@ -189,15 +183,11 @@ def cell_cosine_edges(nv: DataFrame, threshold: float,
             keep = ju > iu  # strict upper triangle in global indexing
             srcs.append(ids[b0 + iu[keep]])
             dsts.append(ids[b0 + ju[keep]])
-        return pd.DataFrame({
-            "src": np.concatenate(srcs) if srcs else
-            np.array([], dtype=np.int64),
-            "dst": np.concatenate(dsts) if dsts else
-            np.array([], dtype=np.int64)})
+        return np.concatenate(srcs), np.concatenate(dsts)
 
-    return (nv.select(bucket_col, id_col, vec_col, norm_col)
-            .groupBy(bucket_col).applyInPandas(run,
-                                               schema=_PAIR_EDGE_SCHEMA))
+    return map_groups(nv.select(bucket_col, id_col, vec_col, norm_col),
+                      bucket_col, cell_pairs, _PAIR_EDGE_SCHEMA,
+                      order=[id_col])
 
 
 def ivf_assign(df: DataFrame, centroids, id_col: str = "vec_id",

@@ -7,12 +7,13 @@ engines compute from identical inputs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from my_ocr_spark.plans.registry import query, t
-from my_ocr_spark.session import map_batches, map_rows, spread_small_scan
+from my_ocr_spark.session import (
+    map_batches, map_groups, map_rows, spread_small_scan,
+)
 from my_ocr_spark.plans.relational import _GT_SQL, _PRED_SQL, _gt_pred
 
 
@@ -122,62 +123,40 @@ _NMS_GREEDY_ORACLE = f"""
 @query("poly_nms_greedy", oracle=_NMS_GREEDY_ORACLE)
 def poly_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact greedy NMS (wrapper.py:477-498 semantics: take best-scored,
-    suppress overlapping, repeat) per image via applyInPandas — bounded
-    per-image work, images processed in parallel. Stable tie-break by
-    box_id mirrors the reference's stable sort (wrapper.py:480).
+    suppress overlapping, repeat) per image in one ``map_groups`` stage
+    — bounded per-image work, images processed in parallel. Stable
+    tie-break by box_id mirrors the reference's stable sort
+    (wrapper.py:480).
     Oracle: the greedy recurrence itself, as a per-image recursive CTE
     that advances one rank per iteration carrying the kept set — exact,
     not rows-only (sequential != nondeterministic)."""
-    b = _boxes(spark, sf_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # TOTAL order: box_id alone is not unique in the synthetic data,
-        # and ties with different geometry would make the greedy result
-        # depend on arrival order — (s, e) completes the key. Bucket
-        # frames hold many images; the leading img key restores the
-        # original per-image frame order (stable mergesort).
-        pdf = pdf.sort_values(["img", "score", "box_id", "s", "e"],
-                              ascending=[True, False, True, True, True],
-                              kind="mergesort")
-        img = pdf["img"].to_numpy(np.int64)
-        s = pdf["s"].to_numpy(np.float64)
-        e = pdf["e"].to_numpy(np.float64)
-        bid = pdf["box_id"].to_numpy(np.int64)
-        sc = pdf["score"].to_numpy(np.float64)
-        starts = np.unique(img, return_index=True)[1]
-        bounds = np.append(starts, len(img))
+    def greedy_nms(box_id, img, s, e, score):
         keep = np.zeros(len(img), dtype=bool)
         ks = np.empty(len(img))
         ke = np.empty(len(img))
+        nk = 0
         with np.errstate(divide="ignore", invalid="ignore"):
-            for gi in range(len(starts)):
-                lo, hi = bounds[gi], bounds[gi + 1]
-                nk = 0  # kept set restarts per image
-                for i in range(lo, hi):
-                    if nk:
-                        # same float64 op order as the scalar loop this
-                        # replaces: inter, union, then the ratio compare
-                        inter = np.minimum(e[i], ke[:nk]) \
-                            - np.maximum(s[i], ks[:nk])
-                        np.maximum(inter, 0.0, out=inter)
-                        union = (e[i] - s[i]) + (ke[:nk] - ks[:nk]) - inter
-                        if bool(np.any((union > 0)
-                                       & (inter / union > 0.5))):
-                            continue
-                    ks[nk] = s[i]
-                    ke[nk] = e[i]
-                    nk += 1
-                    keep[i] = True
-        return pd.DataFrame({"img": img[keep], "box_id": bid[keep],
-                             "score": sc[keep]})
+            for i in range(len(img)):
+                if nk:
+                    # same float64 op order as the scalar loop this
+                    # replaces: inter, union, then the ratio compare
+                    inter = np.minimum(e[i], ke[:nk]) \
+                        - np.maximum(s[i], ks[:nk])
+                    np.maximum(inter, 0.0, out=inter)
+                    union = (e[i] - s[i]) + (ke[:nk] - ks[:nk]) - inter
+                    if bool(np.any((union > 0) & (inter / union > 0.5))):
+                        continue
+                ks[nk] = s[i]
+                ke[nk] = e[i]
+                nk += 1
+                keep[i] = True
+        return img[keep], box_id[keep], score[keep]
 
-    # bucket many small image groups per Python call (CLAUDE.md
-    # invariant 5: per-group launcher overhead dominated at 150k
-    # images/sf1.0 — 25.7 s; bucketed: per-image work unchanged)
-    from my_ocr_spark.session import bucket_count
-    B = bucket_count(spark)
-    return (b.withColumn("_b", F.pmod("img", F.lit(B)))
-             .groupBy("_b").applyInPandas(run, schema=_NMS_OUT))
+    # TOTAL order: box_id alone is not unique in the synthetic data,
+    # and ties with different geometry would make the greedy result
+    # depend on arrival order — (s, e) completes the key
+    return map_groups(_boxes(spark, sf_dir), "img", greedy_nms, _NMS_OUT,
+                      order=[("score", "descending"), "box_id", "s", "e"])
 
 
 @query(
@@ -530,10 +509,10 @@ def polygon_shrink_inset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def min_connect_path_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_connect_path (wrapper.py:690-741): greedy two-ended nearest
     chaining of component centers into a traversal order, per image in
-    applyInPandas (kernel/pathops.py). Oracle trick: on COLLINEAR points
-    the greedy path provably visits in coordinate order, so the
-    canonical traversal equals a row_number over x — an exact SQL check
-    of a sequential graph algorithm. Generic 2-D behavior is
+    one ``map_groups`` stage (kernel/pathops.py). Oracle trick: on
+    COLLINEAR points the greedy path provably visits in coordinate
+    order, so the canonical traversal equals a row_number over x — an
+    exact SQL check of a sequential graph algorithm. Generic 2-D behavior is
     golden-tested in tests/test_pathops.py."""
     from my_ocr_spark.kernel.pathops import canonical_path_order
 
@@ -548,21 +527,11 @@ def min_connect_path_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("pid", T.LongType(), False),
     ])
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"img": [], "seq": [], "pid": []}
-        for img, g in pdf.groupby("img", sort=False):
-            xs = g["x"].to_numpy()
-            pts2 = [[float(x), 0.0] for x in xs]
-            order = canonical_path_order(pts2)
-            out["img"].extend([img] * len(order))
-            out["seq"].extend(range(1, len(order) + 1))
-            out["pid"].extend(int(xs[i]) for i in order)
-        return pd.DataFrame(out, dtype="int64") if out["img"] else \
-            pd.DataFrame({c: pd.Series(dtype="int64") for c in out})
+    def path_order(img, x):
+        order = canonical_path_order([[float(v), 0.0] for v in x])
+        return img[order], np.arange(1, len(order) + 1), x[order]
 
-    bucketed = pts.withColumn("_b", F.pmod(F.col("img"), F.lit(128)))
-    return bucketed.groupBy("_b").applyInPandas(
-        lambda pdf: run(pdf), schema=out_schema)
+    return map_groups(pts, "img", path_order, out_schema)
 
 
 _DISKS_OUT = T.StructType([
@@ -647,7 +616,7 @@ _MERGE_DISKS_ORACLE = """
 def merge_disks_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextSnake merge_disks (wrapper.py:275-303): greedy score-ordered
     merge of overlapping center disks, merged disk = group mean — per
-    image in applyInPandas over the kernel (exact goldens in
+    image in one ``map_groups`` stage over the kernel (exact goldens in
     tests/test_pathops.py). Stable score-tie break by input index
     (documented divergence from the reference's unstable argsort).
     Oracle: the greedy recurrence as a recursive CTE carrying the
@@ -670,32 +639,18 @@ def merge_disks_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_linenumber") * 3 + 5).cast("double").alias("r"),
         F.round(F.col("l_discount") * 10, 2).alias("score"))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"img": [], "mx": [], "my": [], "mr": [], "mscore": []}
-        for img, g in pdf.groupby("img", sort=False):
-            arr = g[["x", "y", "r", "score"]].to_numpy()
-            # deterministic input order for the tie-break: sort rows
-            arr = arr[np.lexsort((arr[:, 3], arr[:, 2], arr[:, 1],
-                                  arr[:, 0]))]
-            for mx, my, mr, ms in merge_disks(arr, 0.5):
-                out["img"].append(int(img))
-                # floor-based 4dp rounding, NOT round(): Python rounds
-                # half-to-even, DuckDB half-away — floor(x*1e4+0.5) is
-                # the same function on the same doubles in both engines
-                out["mx"].append(np.floor(mx * 10000 + 0.5) / 10000)
-                out["my"].append(np.floor(my * 10000 + 0.5) / 10000)
-                out["mr"].append(np.floor(mr * 10000 + 0.5) / 10000)
-                out["mscore"].append(np.floor(ms * 10000 + 0.5) / 10000)
-        return pd.DataFrame(out) if out["img"] else pd.DataFrame({
-            "img": pd.Series(dtype="int64"),
-            "mx": pd.Series(dtype="float64"),
-            "my": pd.Series(dtype="float64"),
-            "mr": pd.Series(dtype="float64"),
-            "mscore": pd.Series(dtype="float64")})
+    def merge_image_disks(img, x, y, r, score):
+        merged = merge_disks(np.stack([x, y, r, score], axis=1), 0.5)
+        # floor-based 4dp rounding, NOT round(): Python rounds
+        # half-to-even, DuckDB half-away — floor(x*1e4+0.5) is the same
+        # function on the same doubles in both engines
+        m = np.floor(merged * 10000 + 0.5) / 10000
+        return img[:len(m)], m[:, 0], m[:, 1], m[:, 2], m[:, 3]
 
-    bucketed = disks.withColumn("_b", F.pmod(F.col("img"), F.lit(128)))
-    return bucketed.groupBy("_b").applyInPandas(
-        lambda pdf: run(pdf), schema=_DISKS_OUT)
+    # rows arrive in (x, y, r, score) order: the deterministic input
+    # order the kernel's stable score tie-break keys on
+    return map_groups(disks, "img", merge_image_disks, _DISKS_OUT,
+                      order=["x", "y", "r", "score"])
 
 
 @query(

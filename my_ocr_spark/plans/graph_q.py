@@ -44,10 +44,11 @@ def drrg_local_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRRG local-graph KNN (local_graph.py:29-296): k-nearest neighbors
     of every text component WITHIN its image, ordered by (squared
     Euclidean distance, neighbor id). Grouped operator — points shuffle
-    once on img, each group's distance matrix stays in one Arrow batch,
-    tiny groups bucketed 256-way (see operators/knn.py). Components are
-    DISTINCT coordinate points (pid = x*150+y is unique within an img by
-    construction — the synthetic lineitem has no unique natural key).
+    once on img into ``map_groups``' bucket_count buckets, and each
+    image's distance matrix is one numpy array (see operators/knn.py).
+    Components are DISTINCT coordinate points (pid = x*150+y is unique
+    within an img by construction — the synthetic lineitem has no
+    unique natural key).
     The img key is orderkey // 10 so per-image point counts stay
     CONSTANT as SF grows (the % 2000 key packed ~300 points/img at
     sf0.1 and made the oracle's per-image self-join quadratic in SF —

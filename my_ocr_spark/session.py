@@ -10,12 +10,15 @@ sessions whose package was loaded from a directory also start their
 Python workers through ``worker_daemon``, so workers import the installed
 pyspark instead of ``$SPARK_HOME``'s source-only ``pyspark.zip``.
 
-A non-grouped Python stage takes one of two forms, both one
-``mapInArrow`` named after its ``fn`` with output typed from the Spark
-schema: ``map_rows`` (``fn`` sees one row's values and yields output
-tuples; runs over ``spread_small_scan(df)``) and ``map_batches`` (``fn``
+A Python stage takes one of three forms, each named after its ``fn``
+in the plan with output typed from the Spark schema: ``map_rows``
+(``fn`` sees one row's values and yields output tuples; one
+``mapInArrow`` over ``spread_small_scan(df)``), ``map_batches`` (``fn``
 sees one Arrow batch's columns as numpy arrays and returns the output
-columns; runs over ``df`` as partitioned).
+columns; one ``mapInArrow`` over ``df`` as partitioned) and
+``map_groups`` (``fn`` sees one group's columns as numpy arrays, in a
+chosen within-group order, and returns the output columns; groups are
+bucketed into ``bucket_count`` grouped ``applyInArrow`` calls).
 """
 
 from __future__ import annotations
@@ -113,7 +116,7 @@ def get_spark(app_name: str = "my_ocr_spark",
     return b.getOrCreate()
 
 
-def spread_small_scan(df, min_parallelism: int | None = None):
+def spread_small_scan(df):
     """Cost-modeled small-input adaptation for python-heavy stages.
 
     A small parquet table scans as 1-4 input splits (file bytes /
@@ -125,28 +128,41 @@ def spread_small_scan(df, min_parallelism: int | None = None):
     this is a no-op, so the fat text column never pays a shuffle where
     the scan is already wide — the same broadcast-threshold-style cost
     model as operators/graph.py's driver path (CLAUDE.md invariant 4).
-    Reading the partition count converts the plan driver-side only (no
-    job)."""
-    spark = df.sparkSession
-    target = min_parallelism or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+
+    A plan holding an exchange (or one AQE wraps to add one) is returned
+    unchanged: the exchange sets its width, and counting its partitions
+    would run it (AQE materializes a broadcast); spread the scan before
+    such a join instead. Otherwise the count is read from the physical
+    plan's RDD, driver-side, without a job."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or \
+            "Exchange" in plan.toString():
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if qe.toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
-def _python_stage(df, fn, schema, to_batch):
-    """What ``map_rows`` and ``map_batches`` share: a DDL string
-    ``schema`` is parsed with ``StructType.fromDDL``, output is typed
-    from its Arrow form, and the stage is one ``mapInArrow`` carrying
-    ``fn.__name__`` so the plan names it. ``to_batch(batch,
-    arrow_schema)`` turns one input ``RecordBatch`` into one output
-    ``RecordBatch``."""
+def _schemas(schema):
+    """A ``StructType`` or DDL string (parsed with
+    ``StructType.fromDDL``) → (Spark schema, its Arrow form)."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow_schema = to_arrow_schema(schema)
+    return schema, to_arrow_schema(schema)
+
+
+def _python_stage(df, fn, schema, to_batch):
+    """What ``map_rows`` and ``map_batches`` share: output is typed
+    from the schema's Arrow form, and the stage is one ``mapInArrow``
+    carrying ``fn.__name__`` so the plan names it. ``to_batch(batch,
+    arrow_schema)`` turns one input ``RecordBatch`` into one output
+    ``RecordBatch``."""
+    schema, arrow_schema = _schemas(schema)
 
     def run(batches):
         for batch in batches:
@@ -154,6 +170,20 @@ def _python_stage(df, fn, schema, to_batch):
 
     run.__name__ = fn.__name__
     return df.mapInArrow(run, schema=schema)
+
+
+def _column_batch(fn, out, arrow_schema):
+    """``fn``'s returned columns as one ``RecordBatch``: each column is
+    typed with ``pa.array(col, type=field.type)``; a wrong column count
+    raises and ragged columns fail in ``RecordBatch.from_arrays``."""
+    import pyarrow as pa
+
+    if len(out) != len(arrow_schema):
+        raise ValueError(f"{fn.__name__} returned {len(out)} columns;"
+                         f" the schema has {len(arrow_schema)}")
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(out, arrow_schema)],
+        schema=arrow_schema)
 
 
 def map_rows(df, fn, schema):
@@ -183,12 +213,13 @@ def map_batches(df, fn, schema):
     """The one batch-level Python stage: ``fn(*cols)`` gets one Arrow
     batch's input columns in ``df.columns`` order as numpy arrays
     (``to_numpy(zero_copy_only=False)``: strings and arrays arrive as
-    object arrays) and returns a tuple of output columns in ``schema``
-    order, of any common length. Each column is typed with
-    ``pa.array(col, type=field.type)``; a wrong column count or a
-    length mismatch fails the batch. For whole-batch numpy transforms:
-    one Python call per batch, no per-row interpretation and no pandas
-    frame. Batches are never empty (an empty partition sends none).
+    object arrays, an integer column holding nulls as float64 with NaN)
+    and returns a tuple of output columns in ``schema`` order, of any
+    common length. Each column is typed with ``pa.array(col,
+    type=field.type)``; a wrong column count or a length mismatch fails
+    the batch. For whole-batch numpy transforms: one Python call per
+    batch, no per-row interpretation and no pandas frame. Batches are
+    never empty (an empty partition sends none).
 
     Runs over ``df`` as partitioned. A numpy transform costs little per
     row, so widening a narrow scan with a shuffle pays only for a heavy
@@ -196,28 +227,77 @@ def map_batches(df, fn, schema):
     (same-session A/B at sf0.1, local[4]: the spread made
     point2line_distance_field 0.94 -> 1.86 s and embedding_ann_lsh
     1.08 -> 1.43 s)."""
-    import pyarrow as pa
-
     def columns(batch, arrow_schema):
-        out = fn(*(c.to_numpy(zero_copy_only=False)
-                   for c in batch.columns))
-        if len(out) != len(arrow_schema):
-            raise ValueError(f"{fn.__name__} returned {len(out)} columns;"
-                             f" the schema has {len(arrow_schema)}")
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(out, arrow_schema)],
-            schema=arrow_schema)
+        cols = [c.to_numpy(zero_copy_only=False) for c in batch.columns]
+        return _column_batch(fn, fn(*cols), arrow_schema)
 
     return _python_stage(df, fn, schema, columns)
 
 
-def bucket_count(spark: SparkSession, per_slot: int = 4,
-                 floor: int = 64) -> int:
-    """Bucket fan-out for grouped-map operators (cogrouped matchers,
-    per-group KNN): track the session's parallelism instead of a fixed
-    constant so a 1000-executor cluster gets 1000× the concurrency a
-    hardcoded B=64 would cap it at. ``per_slot`` buckets per task slot
-    smooths group-size skew; ``floor`` keeps tiny local sessions from
-    degenerating to a handful of giant groups. Reading
-    ``defaultParallelism`` is driver-side metadata — no job is run."""
-    return max(floor, spark.sparkContext.defaultParallelism * per_slot)
+def map_groups(df, key, fn, schema, order=()):
+    """The one grouped Python stage: ``fn(*cols)`` gets one group's
+    columns in ``df.columns`` order as numpy arrays and returns output
+    columns, both as in ``map_batches`` (a group may emit no rows). A
+    group is the rows sharing ``key`` (a column name or a list); the
+    nulls of a key, also of one part of a composite key, form one group.
+    Rows arrive sorted by ``order``: names (ascending) or ``(name,
+    "ascending" | "descending")`` pairs.
+
+    Groups are small (one image's boxes, one shard's docs), so rows hash
+    on ``key`` into ``bucket_count`` buckets, each one grouped
+    ``applyInArrow`` call (plan node ``FlatMapGroupsInArrow`` named
+    after ``fn``). In a bucket one Arrow ``sort_by`` on ``key`` +
+    ``order`` lines the groups up and the table splits where the key
+    changes, compared in Arrow: a null bigint never becomes NaN there."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    keys = [key] if isinstance(key, str) else list(key)
+    by = [(k, "ascending") for k in keys] + [
+        (o, "ascending") if isinstance(o, str) else tuple(o)
+        for o in order]
+    schema, arrow_schema = _schemas(schema)
+
+    def run(table):
+        table = table.sort_by(by)
+        cols = [c.to_numpy(zero_copy_only=False) for c in table.columns]
+        bounds = _group_bounds(table, keys)
+        # one output batch per bucket, not per group: every Arrow batch
+        # costs a round of IPC framing and a JVM-side batch
+        return pa.Table.from_batches(
+            [_column_batch(fn, fn(*(c[lo:hi] for c in cols)),
+                           arrow_schema)
+             for lo, hi in zip(bounds[:-1], bounds[1:])],
+            schema=arrow_schema).combine_chunks()
+
+    run.__name__ = fn.__name__
+    bucket = F.pmod(F.xxhash64(*keys), F.lit(bucket_count(df.sparkSession)))
+    return df.groupBy(bucket.alias("_bucket")).applyInArrow(run, schema)
+
+
+def _group_bounds(table, keys):
+    """Group offsets of a table sorted on ``keys``, 0 to ``num_rows``;
+    two nulls are one value, a null and a value differ."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = table.num_rows
+    change = np.zeros(n - 1, dtype=bool)  # a bucket is never empty
+    for k in keys:
+        a, b = table.column(k).slice(1), table.column(k).slice(0, n - 1)
+        diff = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
+                      pc.not_equal(pc.is_null(a), pc.is_null(b)))
+        change |= diff.to_numpy()
+    return np.concatenate(([0], np.flatnonzero(change) + 1, [n]))
+
+
+def bucket_count(spark: SparkSession) -> int:
+    """Bucket fan-out for grouped maps (``map_groups``, the cogrouped
+    IoU matcher): it tracks the session's parallelism, so a
+    1000-executor cluster is not capped at a constant. A task gets the
+    buckets its shuffle partition hashes to, so its load varies with
+    their number: eight buckets per task slot, and at least 128. On a
+    4-core session, 1000 equal images hashed into 64 buckets left the
+    busiest of 4 tasks 1.28x the mean; into 128, 1.19x. No job is
+    run."""
+    return max(128, spark.sparkContext.defaultParallelism * 8)

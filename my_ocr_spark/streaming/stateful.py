@@ -15,8 +15,8 @@ Scale design (round-3 rework of the round-2 unbounded version):
   semantics change vs. the unbounded version (which could never be run
   forever anyway).
 * Idle groups expire wholesale via GroupStateTimeout.EventTimeTimeout.
-* n_groups tracks session parallelism (session.bucket_count), not a
-  fixed 64.
+* n_groups is a fixed parameter, not session.bucket_count: it is part
+  of the checkpointed state's key (see first_seen_urls).
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ def test_knn_per_group_matches_brute_force(spark):
     df = spark.createDataFrame(rows, "img long, pid long, x long, y long")
     got = {(r["img"], r["src_id"], r["rnk"]):
            (r["neighbor_id"], r["dist2"])
-           for r in knn_per_group(df, k=3, n_buckets=4).collect()}
+           for r in knn_per_group(df, k=3).collect()}
 
     # brute force
     from collections import defaultdict

@@ -1,11 +1,13 @@
-"""map_rows and map_batches: the one per-row and the one batch-level
-Python stage (each one mapInArrow, output columns typed from the Spark
-schema)."""
+"""map_rows, map_batches and map_groups: the one per-row, the one
+batch-level and the one grouped Python stage (output columns typed from
+the Spark schema)."""
+
+import re
 
 import pytest
 from pyspark.sql import types as T
 
-from my_ocr_spark.session import map_batches, map_rows
+from my_ocr_spark.session import map_batches, map_groups, map_rows
 
 _WORDS_DDL = "id bigint, word string, raw binary, lens array<bigint>"
 _WORDS_SCHEMA = T.StructType([
@@ -190,3 +192,107 @@ def test_map_batches_wrong_columns_fail_loudly(spark):
     # 40 rows over at most 4 partitions: every batch holds several
     with pytest.raises(Exception, match="same length"):
         map_batches(spark.range(40), ragged, "a bigint, b bigint").collect()
+
+
+# --- map_groups: the one grouped Python stage -------------------------
+
+_SIZES_DDL = "k bigint, n bigint, total bigint"
+_SIZES_SCHEMA = T.StructType([
+    T.StructField("k", T.LongType()),
+    T.StructField("n", T.LongType()),
+    T.StructField("total", T.LongType()),
+])
+
+
+def _group_sizes():
+    def group_sizes(k, v):
+        # one call per group: every row shares its key
+        assert (k == k[0]).all(), k
+        return k[:1], [len(v)], [int(v.sum())]
+    return group_sizes
+
+
+def test_map_groups_splits_every_bucket_into_its_groups(spark):
+    from my_ocr_spark.session import bucket_count
+
+    n_groups = 3 * bucket_count(spark) + 5  # several groups per bucket
+    # unequal sizes: a split at the wrong offsets mixes two groups
+    rows = [(k, v) for k in range(n_groups) for v in range(k % 5 + 1)]
+    df = spark.createDataFrame(rows, "k bigint, v bigint").repartition(3)
+    got = {r.k: (r.n, r.total) for r in
+           map_groups(df, "k", _group_sizes(), _SIZES_DDL).collect()}
+    assert got == {k: (k % 5 + 1, sum(range(k % 5 + 1)))
+                   for k in range(n_groups)}
+
+
+def test_map_groups_null_key_parts_form_their_own_groups(spark):
+    import numpy as np
+
+    rows = [("a", 1), ("a", 1), (None, 1), (None, 1), ("a", None),
+            (None, None), (None, None), (None, None), ("b", 2)]
+    df = spark.createDataFrame(rows, "s string, n bigint")
+
+    def composite_sizes(s, n):
+        # map_batches' numpy conversion: a bigint column holding nulls
+        # arrives as float64 with NaN
+        first = n[0]
+        return s[:1], [None if np.isnan(first) else int(first)], [len(s)]
+
+    out = map_groups(df, ["s", "n"], composite_sizes,
+                     "s string, n bigint, rows bigint")
+    got = sorted(map(tuple, out.collect()), key=str)
+    assert got == sorted([("a", 1, 2), (None, 1, 2), ("a", None, 1),
+                          (None, None, 3), ("b", 2, 1)], key=str)
+
+
+def test_map_groups_honours_order(spark):
+    rows = [(g, v, w) for g in range(3) for v in (2, 7, 7, 1)
+            for w in (5, 3)]
+    df = spark.createDataFrame(rows, "g bigint, v bigint, w bigint") \
+        .repartition(3)
+
+    def sequence(g, v, w):
+        return g[:1], [v.tolist()], [w.tolist()]
+
+    out = map_groups(df, "g", sequence, "g bigint, vs array<bigint>, "
+                     "ws array<bigint>", order=[("v", "descending"), "w"])
+    want = sorted([(v, w) for v in (2, 7, 7, 1) for w in (5, 3)],
+                  key=lambda p: (-p[0], p[1]))
+    got = {r.g: list(zip(r.vs, r.ws)) for r in out.collect()}
+    assert got == {g: want for g in range(3)}
+
+
+def test_map_groups_empty_input_and_silent_groups(spark):
+    empty = spark.createDataFrame([], "k bigint, v bigint")
+    out = map_groups(empty, "k", _group_sizes(), _SIZES_DDL)
+    assert out.schema == _SIZES_SCHEMA
+    assert out.collect() == []
+
+    def odd_only(k, v):
+        if k[0] % 2 == 0:
+            return (), (), ()
+        return k[:1], [len(v)], [int(v.sum())]
+
+    df = spark.range(0, 40).selectExpr("id % 10 AS k", "id AS v")
+    got = sorted(r.k for r in map_groups(df, "k", odd_only,
+                                         _SIZES_DDL).collect())
+    assert got == [1, 3, 5, 7, 9]
+
+
+def test_map_groups_ddl_and_struct_schema_agree(spark):
+    df = spark.range(0, 30).selectExpr("id % 4 AS k", "id AS v")
+    a = map_groups(df, "k", _group_sizes(), _SIZES_DDL)
+    b = map_groups(df, "k", _group_sizes(), _SIZES_SCHEMA)
+    assert a.schema == b.schema == _SIZES_SCHEMA
+    assert sorted(a.collect()) == sorted(b.collect())
+
+
+def test_map_groups_plan_names_fn(spark):
+    from my_ocr_spark.session import bucket_count
+
+    df = spark.range(0, 30).selectExpr("id % 4 AS k", "id AS v")
+    plan = _plan(map_groups(df, "k", _group_sizes(), _SIZES_DDL))
+    assert re.search(r"FlatMapGroupsInArrow \[_bucket#\d+L\], "
+                     r"group_sizes\(k#", plan), plan
+    b = bucket_count(spark)
+    assert re.search(rf"pmod\(xxhash64\(k#\d+L, 42\), {b}\)", plan), plan

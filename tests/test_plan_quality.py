@@ -36,6 +36,14 @@ def _n_python_maps(plan: str) -> int:
                for n in _node_names(plan))
 
 
+def _n_grouped_maps(plan: str) -> int:
+    """Count grouped and cogrouped Python map nodes of any kind
+    (FlatMapGroupsInArrow, FlatMapGroupsInPandas,
+    FlatMapCoGroupsInPandas, ...)."""
+    return sum(re.fullmatch(r"FlatMap(?:Co)?GroupsIn\w+", n) is not None
+               for n in _node_names(plan))
+
+
 def test_n_exchanges_skips_reused_exchange():
     """Spark prints the reused exchange's description inside the
     ReusedExchange line; only the real Exchange node counts."""
@@ -54,6 +62,21 @@ def test_n_exchanges_skips_reused_exchange():
         "AdaptiveSparkPlan", "SortMergeJoin", "Sort", "Exchange", "Scan",
         "Sort", "ReusedExchange"]
     assert _n_exchanges(plan) == 1
+
+
+def test_n_grouped_maps_counts_every_grouped_form():
+    """An Arrow grouped map or a pandas cogroup counts like a pandas
+    grouped map; a name inside a node's arguments does not."""
+    plan = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=false",
+        "+- Union",
+        "   :- FlatMapGroupsInArrow [_bucket#4L], f(a#1L)#3, [a#5L]",
+        "   :  +- Scan ExistingRDD[a#1L]",
+        "   +- FlatMapCoGroupsInPandas [k#1L], [k#2L], g(k#1L)#6, [k#7L]",
+        "      :- Project [FlatMapGroupsInPandas#8L]",
+        "      +- Scan ExistingRDD[k#2L]",
+    ])
+    assert _n_grouped_maps(plan) == 2
 
 
 @pytest.fixture(scope="module")
@@ -200,10 +223,10 @@ def test_rollup_is_single_pass_expand(spark, sf_dir):
 def test_reading_order_single_shuffle_streaming_map(spark, sf_dir):
     """pdf_reading_order: one hash exchange on the group key feeding a
     streaming mapInPandas — no grouped-map (ObjectHashAggregate/
-    FlatMapGroupsInPandas) launcher."""
+    FlatMapGroupsIn*) launcher."""
     from my_ocr_spark.plans.analytics import pdf_reading_order
     plan = _physical_plan(pdf_reading_order(spark, sf_dir))
-    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert _n_grouped_maps(plan) == 0, plan
     assert _n_python_maps(plan) == 1, plan
 
 
@@ -230,24 +253,6 @@ def test_reading_order_carry_is_batch_size_invariant(spark, sf_dir):
     assert len(want) > 0
     assert got.equals(want)
 
-def test_grouped_map_buckets_track_parallelism(spark, sf_dir):
-    """Grouped-map fan-out must scale with the session, not a constant:
-    the cogrouped IoU matcher's and the KNN operator's bucket expressions
-    carry bucket_count(spark), which tracks defaultParallelism."""
-    from my_ocr_spark.operators.knn import knn_per_group
-    from my_ocr_spark.plans.relational import iou_theta_join_match
-    from my_ocr_spark.session import bucket_count
-
-    b = bucket_count(spark)
-    assert b >= spark.sparkContext.defaultParallelism * 4
-    plan = _physical_plan(iou_theta_join_match(spark, sf_dir))
-    assert re.search(rf"pmod\(img#\d+L?, {b}\)", plan), plan
-    pts = spark.createDataFrame([(1, 1, 0, 0), (1, 2, 3, 4)],
-                                ["img", "pid", "x", "y"])
-    kplan = _physical_plan(knn_per_group(pts))
-    assert re.search(rf"pmod\(img#\d+L?, {b}\)", kplan), kplan
-
-
 def test_minhash_verify_stage_is_jvm_side(spark, sf_dir):
     """minhash_then_verify: the pair-verify stage must be a JVM
     array_intersect over precomputed hash arrays — no Python UDF and no
@@ -259,7 +264,7 @@ def test_minhash_verify_stage_is_jvm_side(spark, sf_dir):
     assert "array_intersect" in plan, plan
     # Python stages only FEED the joins (band rows / hash sets); the
     # verify itself is codegen — no grouped-map or row-at-a-time UDF
-    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert _n_grouped_maps(plan) == 0, plan
     assert "BatchEvalPython" not in plan, plan
 
 
@@ -356,10 +361,14 @@ def test_round7_spread_and_filter_pushdown_gates(spark, sf_dir):
 def test_rebuilt_plans_run_no_jobs(spark, sf_dir, count_jobs):
     """Building a query again reads every table with the schema its
     first build inferred, so it starts no Spark job before an action
-    (each schema-less parquet read would start one)."""
+    (each schema-less parquet read would start one). minhash_then_verify
+    spreads its hash-set input with spread_small_scan around a broadcast
+    semi-join; reading that plan's width must not run the broadcast."""
     from my_ocr_spark.plans.analytics import top_revenue_nation
     from my_ocr_spark.plans.relational import interval_range_join
-    for query in (top_revenue_nation, interval_range_join):
+    from my_ocr_spark.plans.textpipe import minhash_then_verify_q
+    for query in (top_revenue_nation, interval_range_join,
+                  minhash_then_verify_q):
         query(spark, sf_dir)
         _, jobs = count_jobs(lambda: query(spark, sf_dir))
         assert jobs == 0, query.__name__
@@ -385,11 +394,11 @@ _CONVERTED_STAGES = {
 }
 
 
-def _built_plans(spark, build) -> str:
-    """The executed plan of ``build()``'s DataFrame, plus the plans of
-    the SQL executions ``build`` itself ran: semantic_dedup_keep runs
-    its cell assignment inside an eager localCheckpoint, so that stage
-    never reaches the returned plan."""
+def _built_plans(spark, build, plan_text=_physical_plan) -> str:
+    """``plan_text`` of ``build()``'s DataFrame (its executed plan by
+    default), plus the plans of the SQL executions ``build`` itself ran:
+    semantic_dedup_keep runs its cell assignment inside an eager
+    localCheckpoint, so that stage never reaches the returned plan."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -400,7 +409,7 @@ def _built_plans(spark, build) -> str:
             if n else -1
 
     first = last_id() + 1
-    plans = [_physical_plan(build())]
+    plans = [plan_text(build())]
     for i in range(first, last_id() + 1):
         e = store.execution(i)
         if e.isDefined():
@@ -426,3 +435,62 @@ def test_python_stages_plan_as_named_map_in_arrow(spark, sf_dir):
     finally:
         spark.conf.set(key, old)
 
+
+
+# Registry queries whose grouped Python stage is built by map_groups
+# where a hand-bucketed applyInPandas used to be, each with the name of
+# its stage's fn. Found by scanning every registry query's plan (and the
+# plans its build runs) for FlatMapGroupsInArrow nodes.
+_GROUPED_STAGES = {
+    "drrg_local_knn": "local_knn",
+    "merge_disks_greedy": "merge_image_disks",
+    "min_connect_path_order": "path_order",
+    "poly_nms_greedy": "greedy_nms",
+    "semantic_dedup_keep": "cell_pairs",
+    "sequence_pack_greedy": "pack_shard",
+}
+
+
+def test_grouped_map_buckets_track_parallelism(spark, sf_dir):
+    """Grouped-map fan-out must scale with the session, not a constant:
+    every map_groups stage and the cogrouped IoU matcher bucket with
+    bucket_count(spark), which tracks defaultParallelism, and each
+    converted query plans its stage as a FlatMapGroupsInArrow named
+    after its fn."""
+    import __spark_entry__ as E
+    from my_ocr_spark.plans.relational import iou_theta_join_match
+    from my_ocr_spark.session import bucket_count
+
+    b = bucket_count(spark)
+    assert b >= spark.sparkContext.defaultParallelism * 8
+    # the key may be an expression folded into the bucket's Project:
+    # pmod(xxhash64((l_orderkey#1L div 10), 42), 128)
+    bucket = re.compile(
+        rf"pmod\((?:xxhash64\((?:[^()]|\([^()]*\))*\)|\w+#\d+L?), {b}\)")
+    plan = _physical_plan(iou_theta_join_match(spark, sf_dir))
+    assert bucket.search(plan), plan
+
+    # a bucket expression computed next to an aggregate only shows in
+    # the optimized logical plan, which the "extended" explain mode adds
+    # to the description of every execution a build runs
+    def logical_and_physical(df) -> str:
+        qe = df._jdf.queryExecution()
+        return f"{qe.optimizedPlan()}\n{qe.executedPlan()}"
+
+    queries = E.queries()
+    key = "spark.sql.ui.explainMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "extended")
+    try:
+        plans = {name: _built_plans(
+                     spark, lambda: queries[name](spark, sf_dir),
+                     logical_and_physical)
+                 for name in _GROUPED_STAGES}
+    finally:
+        spark.conf.set(key, old)
+    assert [n for n, p in plans.items() if not bucket.search(p)] == []
+    for name, fn in _GROUPED_STAGES.items():
+        node = rf"FlatMapGroupsInArrow \[_bucket#\d+L\], {fn}\("
+        assert re.search(node, plans[name]), (name, fn, plans[name])
+        assert "FlatMapGroupsInPandas" not in _node_names(plans[name]), \
+            (name, plans[name])
