@@ -19,7 +19,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     End-to-end main-content extraction: synthesize the CC-style page table
     from the documents fixture, latest-snapshot dedup, HTML-parse + block
-    scoring + boilerplate strip inside one mapInPandas stage, return the
+    scoring + boilerplate strip inside one mapInArrow stage, return the
     extracted table (url, title, text, spans stats).
     """
     from my_ocr_spark.plans.flagship import flagship_extract

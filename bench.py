@@ -6,7 +6,7 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 The flagship extraction benchmark amplifies the documents table ~40x in
 Spark (JVM-side concat — deterministic) to a ~200k-page corpus so the
-mapInPandas stage dominates, matching the north metric (docs/sec, MB/sec
+mapInArrow stage dominates, matching the north metric (docs/sec, MB/sec
 extracted). Scaling-efficiency runs (local[8] vs local[32]) live in
 scripts/bench_scaling.py and write BENCH/BASELINE.md.
 """

@@ -30,8 +30,9 @@ def greedy_pack(d: DataFrame, capacity: int = 512) -> DataFrame:
     ids; oversize docs get solo packs).
 
     Shards are small by construction (~hundreds of docs), so the scan
-    is one ``session.map_groups`` stage keyed on (source, shard): shards
-    share buckets, and a NULL source is a shard like any other.
+    is one ``session.map_groups`` stage keyed on (source, shard): one
+    Python stream per partition runs many shards, and a NULL source is a
+    shard like any other.
 
     The per-doc capacity loop stays plain Python BY MEASUREMENT (round-6
     note, per the vectorize-or-document task): isolated at sf0.1 it runs

@@ -5,16 +5,13 @@ decode stub) — every query here now carries an exact DuckDB oracle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
 from my_ocr_spark.kernel.layout import page_reading_order_text
 from my_ocr_spark.plans.registry import query, t
-from my_ocr_spark.session import map_rows
+from my_ocr_spark.session import map_groups, map_rows
 
 
 @query(
@@ -249,13 +246,13 @@ def _pdf_oracle() -> str:
 def pdf_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF/layout branch (SURVEY.md §7.1 step 5): synthesize word boxes
     per 'page' deterministically from lineitem rows, then run the XY-cut +
-    line-stitch kernel per page via a streaming grouped map. Two-column
+    line-stitch kernel per page in one ``map_groups`` stage. Two-column
     pages (orderkey%2=0) exercise the column-order path; paired line
     bands (two linenumbers per y-band, s∈{0,2,4} jitter) exercise the
     same-line ratio boundary (Δ=2 links, Δ=4 needs transitive chaining)
     and 30px slots exercise the x-gap segment split both ways.
 
-    Scale shape: groupBy(page) shuffles narrow box rows only; per-page box
+    Scale shape: the stage shuffles narrow box rows only; per-page box
     counts are bounded (≤7 lineitems/order) — the max_candidates analog.
     Oracle: the full XY-cut + stitch pipeline re-derived in SQL
     (see _pdf_oracle)."""
@@ -274,64 +271,12 @@ def pdf_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("x1", F.col("x0") + 8.0 * F.length("word")) \
      .withColumn("y1", F.col("y0") + 12.0)
 
-    def kernel_pages(pdf: pd.DataFrame) -> pd.DataFrame:
-        # page iteration over raw numpy slices of the sorted batch:
-        # pandas groupby + per-group column access was 60% of kernel
-        # wall (73k DataFrame __getitem__ for 15k pages — profiled);
-        # one to_numpy per column + np.unique boundaries removes it
-        import numpy as np
+    def page_text(page_key, x0, y0, word, x1, y1):
+        return page_key[:1], [len(page_key)], [page_reading_order_text(
+            list(zip(x0, y0, x1, y1, word)), x_gap=60.0, y_gap=6.0)]
 
-        pdf = pdf.sort_values(["page_key", "y0", "x0", "word"],
-                              kind="mergesort")
-        pk = pdf["page_key"].to_numpy(dtype=np.int64)
-        x0 = pdf["x0"].to_numpy()
-        y0 = pdf["y0"].to_numpy()
-        x1 = pdf["x1"].to_numpy()
-        y1 = pdf["y1"].to_numpy()
-        wd = pdf["word"].to_numpy(dtype=object)
-        keys, starts = np.unique(pk, return_index=True)
-        bounds = np.append(starts, len(pk))
-        out = {"page_key": [], "n_boxes": [], "ordered_text": []}
-        for k in range(len(keys)):
-            s, e = bounds[k], bounds[k + 1]
-            bxs = list(zip(x0[s:e], y0[s:e], x1[s:e], y1[s:e], wd[s:e]))
-            out["page_key"].append(int(keys[k]))
-            out["n_boxes"].append(e - s)
-            out["ordered_text"].append(
-                page_reading_order_text(bxs, x_gap=60.0, y_gap=6.0))
-        return pd.DataFrame(out)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Streaming grouped map: rows arrive partition-sorted by page_key
-        # (repartition + sortWithinPartitions below), so groups are
-        # contiguous; an Arrow batch may still END mid-page, so the
-        # trailing page is carried into the next batch and flushed at
-        # iterator end. One Python call per BATCH (not per page and not
-        # per bucket): replacing the 512-bucket applyInPandas cut the
-        # same job from 4.5 s to 1.6 s warm — the grouped-map launcher
-        # overhead, not the kernel, was the cost.
-        pend: pd.DataFrame | None = None
-        for pdf in batches:
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            if not len(pdf):
-                continue
-            last_key = pdf["page_key"].iloc[-1]
-            mask = pdf["page_key"] == last_key
-            pend = pdf[mask]
-            pdf = pdf[~mask]
-            if len(pdf):
-                yield kernel_pages(pdf)
-        if pend is not None and len(pend):
-            yield kernel_pages(pend)
-
-    # hash-repartition on the group key (partition count follows
-    # spark.sql.shuffle.partitions — no hardcoded width), local sort for
-    # group contiguity; same shuffle volume as the grouped-map form
-    return (boxes.repartition("page_key")
-                 .sortWithinPartitions("page_key")
-                 .mapInPandas(run, schema=_PDF_OUT))
+    return map_groups(boxes, "page_key", page_text, _PDF_OUT,
+                      order=("y0", "x0", "word"))
 
 
 # closed-form extraction CTEs shared by extract_maincontent's oracle and

@@ -44,8 +44,8 @@ def drrg_local_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DRRG local-graph KNN (local_graph.py:29-296): k-nearest neighbors
     of every text component WITHIN its image, ordered by (squared
     Euclidean distance, neighbor id). Grouped operator — points shuffle
-    once on img into ``map_groups``' bucket_count buckets, and each
-    image's distance matrix is one numpy array (see operators/knn.py).
+    once on img into one ``map_groups`` stage, and each image's
+    distance matrix is one numpy array (see operators/knn.py).
     Components are DISTINCT coordinate points (pid = x*150+y is unique
     within an img by construction — the synthetic lineitem has no
     unique natural key).

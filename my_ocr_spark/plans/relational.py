@@ -378,10 +378,11 @@ def iou_theta_join_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gt_id": gid[grows], "pred_id": pid_a[pidx[first[ok]]],
             "img": gimg[grows], "iou": best[ok]})
 
-    # bucket many small image groups per Python call; bucket count tracks
-    # session parallelism (was a hardcoded 64 — a concurrency cap at scale)
-    from my_ocr_spark.session import bucket_count
-    B = bucket_count(spark)
+    # bucket many small image groups per Python call. The count tracks
+    # the session's parallelism, so a 1000-executor cluster is not capped
+    # at a constant; a task gets the buckets its shuffle partition hashes
+    # to, so eight per task slot, at least 128, even out its load
+    B = max(128, 8 * spark.sparkContext.defaultParallelism)
     gtb = gt.withColumn("_b", F.pmod("img", F.lit(B)))
     p = pred.select("pred_id", F.col("img").alias("pimg"),
                     F.col("s").alias("ps"), F.col("e").alias("pe"))

@@ -17,8 +17,10 @@ in the plan with output typed from the Spark schema: ``map_rows``
 sees one Arrow batch's columns as numpy arrays and returns the output
 columns; one ``mapInArrow`` over ``df`` as partitioned) and
 ``map_groups`` (``fn`` sees one group's columns as numpy arrays, in a
-chosen within-group order, and returns the output columns; groups are
-bucketed into ``bucket_count`` grouped ``applyInArrow`` calls).
+chosen within-group order, and returns the output columns; rows
+hash-partition on the key and sort within each partition, and one
+``mapInArrow`` streams over the groups, holding a group that spans
+batches until it ends).
 """
 
 from __future__ import annotations
@@ -241,38 +243,62 @@ def map_groups(df, key, fn, schema, order=()):
     group is the rows sharing ``key`` (a column name or a list); the
     nulls of a key, also of one part of a composite key, form one group.
     Rows arrive sorted by ``order``: names (ascending) or ``(name,
-    "ascending" | "descending")`` pairs.
+    "ascending" | "descending")`` pairs, nulls last either way.
 
-    Groups are small (one image's boxes, one shard's docs), so rows hash
-    on ``key`` into ``bucket_count`` buckets, each one grouped
-    ``applyInArrow`` call (plan node ``FlatMapGroupsInArrow`` named
-    after ``fn``). In a bucket one Arrow ``sort_by`` on ``key`` +
-    ``order`` lines the groups up and the table splits where the key
-    changes, compared in Arrow: a null bigint never becomes NaN there."""
+    Groups are small (one image's boxes, one page's words), so a Python
+    call per group would drown in per-call overhead; instead rows
+    hash-partition on ``key``, each partition sorts on ``key`` +
+    ``order``, and one ``mapInArrow`` named after ``fn`` streams over
+    it. Each batch is cut where the key changes, compared in Arrow (a
+    null bigint never becomes NaN there); its last group may go on in
+    the next batch, so it is held until the key changes or the stream
+    ends. Every group's output is checked on its own, and a batch's
+    groups leave as one output batch."""
     import pyarrow as pa
     from pyspark.sql import functions as F
 
     keys = [key] if isinstance(key, str) else list(key)
-    by = [(k, "ascending") for k in keys] + [
-        (o, "ascending") if isinstance(o, str) else tuple(o)
-        for o in order]
+
+    def sort_col(o):
+        name, direction = (o, "ascending") if isinstance(o, str) else o
+        c = F.col(name)
+        return {"ascending": c.asc_nulls_last,
+                "descending": c.desc_nulls_last}[direction]()
+
     schema, arrow_schema = _schemas(schema)
 
-    def run(table):
-        table = table.sort_by(by)
-        cols = [c.to_numpy(zero_copy_only=False) for c in table.columns]
-        bounds = _group_bounds(table, keys)
-        # one output batch per bucket, not per group: every Arrow batch
-        # costs a round of IPC framing and a JVM-side batch
-        return pa.Table.from_batches(
-            [_column_batch(fn, fn(*(c[lo:hi] for c in cols)),
-                           arrow_schema)
-             for lo, hi in zip(bounds[:-1], bounds[1:])],
-            schema=arrow_schema).combine_chunks()
+    def numpy_cols(batches):
+        table = pa.Table.from_batches(batches)
+        return [c.to_numpy(zero_copy_only=False) for c in table.columns]
+
+    def run(batches):
+        held = []  # the open group's rows, one slice per batch
+        for batch in batches:
+            # the held group's last row leads the batch: bounds[1] is
+            # where that group ends in it, and bounds[0] is -1
+            lead = [held[-1].slice(held[-1].num_rows - 1)] if held else []
+            bounds = _group_bounds(pa.Table.from_batches(lead + [batch]),
+                                   keys) - len(lead)
+            outs = []
+            if held:
+                held.append(batch.slice(0, bounds[1]))
+                if len(bounds) == 2:
+                    continue
+                outs.append(fn(*numpy_cols(held)))
+                bounds = bounds[1:]
+            cols = numpy_cols([batch])
+            outs += [fn(*(c[lo:hi] for c in cols))
+                     for lo, hi in zip(bounds[:-2], bounds[1:-1])]
+            held = [batch.slice(bounds[-2])]
+            if outs:
+                yield _joined_batch(fn, outs, arrow_schema)
+        if held:
+            yield _joined_batch(fn, [fn(*numpy_cols(held))], arrow_schema)
 
     run.__name__ = fn.__name__
-    bucket = F.pmod(F.xxhash64(*keys), F.lit(bucket_count(df.sparkSession)))
-    return df.groupBy(bucket.alias("_bucket")).applyInArrow(run, schema)
+    return (df.repartition(*keys)
+            .sortWithinPartitions(*map(sort_col, keys + list(order)))
+            .mapInArrow(run, schema=schema))
 
 
 def _group_bounds(table, keys):
@@ -282,7 +308,7 @@ def _group_bounds(table, keys):
     import pyarrow.compute as pc
 
     n = table.num_rows
-    change = np.zeros(n - 1, dtype=bool)  # a bucket is never empty
+    change = np.zeros(n - 1, dtype=bool)
     for k in keys:
         a, b = table.column(k).slice(1), table.column(k).slice(0, n - 1)
         diff = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
@@ -291,13 +317,25 @@ def _group_bounds(table, keys):
     return np.concatenate(([0], np.flatnonzero(change) + 1, [n]))
 
 
-def bucket_count(spark: SparkSession) -> int:
-    """Bucket fan-out for grouped maps (``map_groups``, the cogrouped
-    IoU matcher): it tracks the session's parallelism, so a
-    1000-executor cluster is not capped at a constant. A task gets the
-    buckets its shuffle partition hashes to, so its load varies with
-    their number: eight buckets per task slot, and at least 128. On a
-    4-core session, 1000 equal images hashed into 64 buckets left the
-    busiest of 4 tasks 1.28x the mean; into 128, 1.19x. No job is
-    run."""
-    return max(128, spark.sparkContext.defaultParallelism * 8)
+def _joined_batch(fn, outs, arrow_schema):
+    """Several groups' returned columns as one ``RecordBatch``. Each
+    group is checked on its own (joined, one group's ragged columns
+    could even out another's); then each column's pieces are joined
+    once, numpy arrays with ``np.concatenate`` and anything else as one
+    list, so the Arrow conversion runs per batch, not per group."""
+    import numpy as np
+
+    for out in outs:
+        lens = [len(c) for c in out]
+        if len(out) != len(arrow_schema) or len(set(lens)) > 1:
+            raise ValueError(f"{fn.__name__} returned columns of lengths"
+                             f" {lens}; the schema has {len(arrow_schema)}"
+                             " columns, all the same length")
+    cols = []
+    for pieces in zip(*outs):
+        pieces = [p for p in pieces if len(p)]
+        cols.append(np.concatenate(pieces)
+                    if pieces and all(isinstance(p, np.ndarray)
+                                      for p in pieces)
+                    else [v for p in pieces for v in p])
+    return _column_batch(fn, cols, arrow_schema)

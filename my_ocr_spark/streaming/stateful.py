@@ -15,8 +15,9 @@ Scale design (round-3 rework of the round-2 unbounded version):
   semantics change vs. the unbounded version (which could never be run
   forever anyway).
 * Idle groups expire wholesale via GroupStateTimeout.EventTimeTimeout.
-* n_groups is a fixed parameter, not session.bucket_count: it is part
-  of the checkpointed state's key (see first_seen_urls).
+* n_groups is a fixed parameter, not a function of the session's
+  parallelism: it is part of the checkpointed state's key (see
+  first_seen_urls).
 """
 
 from __future__ import annotations

@@ -2,7 +2,9 @@
 batch-level and the one grouped Python stage (output columns typed from
 the Spark schema)."""
 
+import itertools
 import re
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import types as T
@@ -212,17 +214,50 @@ def _group_sizes():
     return group_sizes
 
 
-def test_map_groups_splits_every_bucket_into_its_groups(spark):
-    from my_ocr_spark.session import bucket_count
+@contextmanager
+def _one_partition(spark, batch_rows):
+    """One shuffle partition and ``batch_rows``-row Arrow batches: a
+    map_groups stage then sees every group in key order, and its batch
+    boundaries fall at known rows."""
+    new = {"spark.sql.shuffle.partitions": "1",
+           "spark.sql.execution.arrow.maxRecordsPerBatch": str(batch_rows)}
+    old = {k: spark.conf.get(k) for k in new}
+    for k, v in new.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
-    n_groups = 3 * bucket_count(spark) + 5  # several groups per bucket
-    # unequal sizes: a split at the wrong offsets mixes two groups
-    rows = [(k, v) for k in range(n_groups) for v in range(k % 5 + 1)]
+
+def test_map_groups_splits_every_batch_into_its_groups(spark):
+    # unequal sizes: a cut at the wrong offsets mixes two groups. In key
+    # order, 3-row batches end exactly where group 1 ends (row 3), group
+    # 2's 11 rows span 4 batches, and other groups straddle a boundary
+    sizes = [1, 2, 11] + [k % 5 + 1 for k in range(3, 40)]
+    ends = set(itertools.accumulate(sizes))
+    assert 3 in ends and any(e % 3 for e in ends)
+    rows = [(k, v) for k, n in enumerate(sizes) for v in range(n)]
     df = spark.createDataFrame(rows, "k bigint, v bigint").repartition(3)
-    got = {r.k: (r.n, r.total) for r in
-           map_groups(df, "k", _group_sizes(), _SIZES_DDL).collect()}
-    assert got == {k: (k % 5 + 1, sum(range(k % 5 + 1)))
-                   for k in range(n_groups)}
+    with _one_partition(spark, 3):
+        out = map_groups(df, "k", _group_sizes(), _SIZES_DDL).collect()
+    assert len(out) == len(sizes)
+    assert {r.k: (r.n, r.total) for r in out} == {
+        k: (n, sum(range(n))) for k, n in enumerate(sizes)}
+
+
+def test_map_groups_checks_each_groups_columns(spark):
+    # groups 0 and 1 share one output batch; their columns would join
+    # to equal lengths (3, 3), so only a per-group check catches them
+    def ragged(k, v):
+        return {0: ([0, 0], [1]), 1: ([1], [1, 1])}.get(
+            int(k[0]), (k[:1], [len(v)]))
+
+    df = spark.range(0, 9).selectExpr("id % 3 AS k", "id AS v")
+    with _one_partition(spark, 100), \
+            pytest.raises(Exception, match="same length"):
+        map_groups(df, "k", ragged, "a bigint, b bigint").collect()
 
 
 def test_map_groups_null_key_parts_form_their_own_groups(spark):
@@ -288,11 +323,9 @@ def test_map_groups_ddl_and_struct_schema_agree(spark):
 
 
 def test_map_groups_plan_names_fn(spark):
-    from my_ocr_spark.session import bucket_count
-
     df = spark.range(0, 30).selectExpr("id % 4 AS k", "id AS v")
     plan = _plan(map_groups(df, "k", _group_sizes(), _SIZES_DDL))
-    assert re.search(r"FlatMapGroupsInArrow \[_bucket#\d+L\], "
-                     r"group_sizes\(k#", plan), plan
-    b = bucket_count(spark)
-    assert re.search(rf"pmod\(xxhash64\(k#\d+L, 42\), {b}\)", plan), plan
+    assert "MapInArrow group_sizes(" in plan, plan
+    assert re.search(r"Sort \[k#\d+L ASC NULLS LAST", plan), plan
+    assert re.search(r"Exchange hashpartitioning\(k#", plan), plan
+    assert "_bucket" not in plan, plan

@@ -29,9 +29,9 @@ def _n_exchanges(plan: str) -> int:
 
 
 def _n_python_maps(plan: str) -> int:
-    """Count per-batch Python map nodes of either kind (map_rows and
-    map_batches stages plan as MapInArrow, pdf_reading_order's carry as
-    MapInPandas)."""
+    """Count per-batch Python map nodes of either kind (map_rows,
+    map_batches and map_groups stages plan as MapInArrow, a hand-rolled
+    mapInPandas loop as MapInPandas)."""
     return sum(n in ("MapInPandas", "MapInArrow")
                for n in _node_names(plan))
 
@@ -221,9 +221,9 @@ def test_rollup_is_single_pass_expand(spark, sf_dir):
 
 
 def test_reading_order_single_shuffle_streaming_map(spark, sf_dir):
-    """pdf_reading_order: one hash exchange on the group key feeding a
-    streaming mapInPandas — no grouped-map (ObjectHashAggregate/
-    FlatMapGroupsIn*) launcher."""
+    """pdf_reading_order: one hash exchange on the group key feeding
+    map_groups' streaming MapInArrow — no grouped-map
+    (FlatMapGroupsIn*) launcher."""
     from my_ocr_spark.plans.analytics import pdf_reading_order
     plan = _physical_plan(pdf_reading_order(spark, sf_dir))
     assert _n_grouped_maps(plan) == 0, plan
@@ -231,16 +231,33 @@ def test_reading_order_single_shuffle_streaming_map(spark, sf_dir):
 
 
 
-def test_reading_order_carry_is_batch_size_invariant(spark, sf_dir):
-    """pdf_reading_order carries a page that straddles an Arrow batch
-    boundary into the next batch. A 3-row cap puts nearly every page
-    across a boundary (pages hold 1-7 boxes), so the output must match
-    the same query at the session's own batch size."""
-    from my_ocr_spark.plans.analytics import pdf_reading_order
+# Registry queries whose grouped Python stage is built by map_groups,
+# each with the name of its stage's fn: one per map_groups call site in
+# the package.
+_GROUPED_STAGES = {
+    "drrg_local_knn": "local_knn",
+    "merge_disks_greedy": "merge_image_disks",
+    "min_connect_path_order": "path_order",
+    "pdf_reading_order": "page_text",
+    "poly_nms_greedy": "greedy_nms",
+    "semantic_dedup_keep": "cell_pairs",
+    "sequence_pack_greedy": "pack_shard",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_STAGES))
+def test_reading_order_carry_is_batch_size_invariant(spark, sf_dir, name):
+    """map_groups holds a group that straddles an Arrow batch boundary
+    until it ends. A 3-row cap puts nearly every group across a
+    boundary, so each grouped query's rows must match the same query at
+    the session's own batch size."""
+    import __spark_entry__ as E
+
+    query = E.queries()[name]
 
     def run():
-        return (pdf_reading_order(spark, sf_dir).toPandas()
-                .sort_values("page_key").reset_index(drop=True))
+        df = query(spark, sf_dir).toPandas()
+        return df.sort_values(list(df.columns)).reset_index(drop=True)
 
     want = run()
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -394,11 +411,14 @@ _CONVERTED_STAGES = {
 }
 
 
-def _built_plans(spark, build, plan_text=_physical_plan) -> str:
-    """``plan_text`` of ``build()``'s DataFrame (its executed plan by
-    default), plus the plans of the SQL executions ``build`` itself ran:
-    semantic_dedup_keep runs its cell assignment inside an eager
-    localCheckpoint, so that stage never reaches the returned plan."""
+def _built_plans(spark, sf_dir, names) -> dict[str, str]:
+    """Each named registry query's executed plan, plus the plans of the
+    SQL executions its build itself ran: semantic_dedup_keep runs its
+    cell assignment inside an eager localCheckpoint, so that stage
+    never reaches the returned plan."""
+    import __spark_entry__ as E
+
+    queries = E.queries()
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -408,89 +428,49 @@ def _built_plans(spark, build, plan_text=_physical_plan) -> str:
         return store.executionsList(n - 1, 1).apply(0).executionId() \
             if n else -1
 
-    first = last_id() + 1
-    plans = [plan_text(build())]
-    for i in range(first, last_id() + 1):
-        e = store.execution(i)
-        if e.isDefined():
-            plans.append(e.get().physicalPlanDescription())
-    return "\n".join(plans)
+    def built(name) -> str:
+        first = last_id() + 1
+        plans = [_physical_plan(queries[name](spark, sf_dir))]
+        for i in range(first, last_id() + 1):
+            e = store.execution(i)
+            if e.isDefined():
+                plans.append(e.get().physicalPlanDescription())
+        return "\n".join(plans)
+
+    key = "spark.sql.ui.explainMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "simple")  # the executed plan's own format
+    try:
+        return {name: built(name) for name in names}
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_python_stages_plan_as_named_map_in_arrow(spark, sf_dir):
     """Every converted stage plans as a MapInArrow named after its fn,
     and no MapInPandas is left in those queries."""
-    import __spark_entry__ as E
-
-    queries = E.queries()
-    key = "spark.sql.ui.explainMode"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "simple")  # the executed plan's own format
-    try:
-        for name, fns in _CONVERTED_STAGES.items():
-            plan = _built_plans(spark, lambda: queries[name](spark, sf_dir))
-            assert "MapInPandas" not in _node_names(plan), (name, plan)
-            for fn in fns:
-                assert f"MapInArrow {fn}(" in plan, (name, fn, plan)
-    finally:
-        spark.conf.set(key, old)
-
-
-
-# Registry queries whose grouped Python stage is built by map_groups
-# where a hand-bucketed applyInPandas used to be, each with the name of
-# its stage's fn. Found by scanning every registry query's plan (and the
-# plans its build runs) for FlatMapGroupsInArrow nodes.
-_GROUPED_STAGES = {
-    "drrg_local_knn": "local_knn",
-    "merge_disks_greedy": "merge_image_disks",
-    "min_connect_path_order": "path_order",
-    "poly_nms_greedy": "greedy_nms",
-    "semantic_dedup_keep": "cell_pairs",
-    "sequence_pack_greedy": "pack_shard",
-}
-
-
-def test_grouped_map_buckets_track_parallelism(spark, sf_dir):
-    """Grouped-map fan-out must scale with the session, not a constant:
-    every map_groups stage and the cogrouped IoU matcher bucket with
-    bucket_count(spark), which tracks defaultParallelism, and each
-    converted query plans its stage as a FlatMapGroupsInArrow named
-    after its fn."""
-    import __spark_entry__ as E
-    from my_ocr_spark.plans.relational import iou_theta_join_match
-    from my_ocr_spark.session import bucket_count
-
-    b = bucket_count(spark)
-    assert b >= spark.sparkContext.defaultParallelism * 8
-    # the key may be an expression folded into the bucket's Project:
-    # pmod(xxhash64((l_orderkey#1L div 10), 42), 128)
-    bucket = re.compile(
-        rf"pmod\((?:xxhash64\((?:[^()]|\([^()]*\))*\)|\w+#\d+L?), {b}\)")
-    plan = _physical_plan(iou_theta_join_match(spark, sf_dir))
-    assert bucket.search(plan), plan
-
-    # a bucket expression computed next to an aggregate only shows in
-    # the optimized logical plan, which the "extended" explain mode adds
-    # to the description of every execution a build runs
-    def logical_and_physical(df) -> str:
-        qe = df._jdf.queryExecution()
-        return f"{qe.optimizedPlan()}\n{qe.executedPlan()}"
-
-    queries = E.queries()
-    key = "spark.sql.ui.explainMode"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "extended")
-    try:
-        plans = {name: _built_plans(
-                     spark, lambda: queries[name](spark, sf_dir),
-                     logical_and_physical)
-                 for name in _GROUPED_STAGES}
-    finally:
-        spark.conf.set(key, old)
-    assert [n for n, p in plans.items() if not bucket.search(p)] == []
-    for name, fn in _GROUPED_STAGES.items():
-        node = rf"FlatMapGroupsInArrow \[_bucket#\d+L\], {fn}\("
-        assert re.search(node, plans[name]), (name, fn, plans[name])
-        assert "FlatMapGroupsInPandas" not in _node_names(plans[name]), \
+    plans = _built_plans(spark, sf_dir, _CONVERTED_STAGES)
+    for name, fns in _CONVERTED_STAGES.items():
+        assert "MapInPandas" not in _node_names(plans[name]), \
             (name, plans[name])
+        for fn in fns:
+            assert f"MapInArrow {fn}(" in plans[name], (name, fn)
+
+
+def test_grouped_stages_stream_through_map_in_arrow(spark, sf_dir):
+    """Every map_groups query plans its stage as one streaming MapInArrow
+    named after its fn, with no grouped-map launcher left
+    (FlatMap(Co)GroupsIn*). The cogrouped IoU matcher keeps its
+    buckets, and their count tracks the session's parallelism, so a
+    1000-executor cluster is not capped at a constant."""
+    from my_ocr_spark.plans.relational import iou_theta_join_match
+
+    plans = _built_plans(spark, sf_dir, _GROUPED_STAGES)
+    for name, fn in _GROUPED_STAGES.items():
+        assert f"MapInArrow {fn}(" in plans[name], (name, fn, plans[name])
+        assert _n_grouped_maps(plans[name]) == 0, (name, plans[name])
+    plan = _physical_plan(iou_theta_join_match(spark, sf_dir))
+    buckets = {int(b) for b in re.findall(r"pmod\(\w+#\d+L?, (\d+)\)",
+                                          plan)}
+    assert len(buckets) == 1, plan
+    assert buckets.pop() >= 8 * spark.sparkContext.defaultParallelism
